@@ -28,12 +28,19 @@ Scale reasoning (explicitly, for the 1000-executor / 100 TB case):
   progress knob for multi-day backfills: a crash loses at most one wave.
   Each wave appends data + manifest rows; restart skips completed buckets.
 - **Metrics** ride as columns and aggregate per bucket into the manifest
-  from a column- AND partition-pruned read-back: output is
-  ``partitionBy(part_id)``, so a wave reads back only its own bucket
-  directories no matter how much earlier output has accumulated (same
-  pruning serves the resume anti-join).  Files per wave = buckets-in-wave x
-  ``files_per_bucket`` (the pre-write repartition aligns rows to writers),
-  so file counts stay bounded at any corpus size.
+  from a column- AND partition-pruned read-back of the committed files:
+  output is ``partitionBy(part_id)``, so a wave reads back only its own
+  bucket directories no matter how much earlier output has accumulated
+  (same pruning serves the resume anti-join).  The read-back passes the
+  output's known schema (no schema-inference job), and its
+  ``groupBy(part_id)`` is collected to the driver — at most one row per
+  bucket of the wave; buckets with no rows get zero rows in Python.  The
+  manifest rows are then appended from the driver as one small parquet
+  file (``snapshots.append_parquet_rows``, the snapshot log's appender),
+  so committing a wave's metadata costs one Spark action, not a write
+  job.  Files per wave = buckets-in-wave x ``files_per_bucket`` (the
+  pre-write repartition aligns rows to writers), so file counts stay
+  bounded at any corpus size.
 - The sink is parquet (no Iceberg runtime in this sandbox); append-commit +
   manifest is the Iceberg snapshot pattern — ``.writeTo(tbl).append()`` is
   a drop-in swap.  ``plans/snapshots.py`` supplies the remaining Iceberg
@@ -49,13 +56,42 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..config import Configuration
-from ..operators.extract import extract_operator
+from ..operators.extract import EXTRACT_SCHEMA, extract_operator
+from . import snapshots as snaplog
 
 #: Arrow batch size for multi-MB HTML rows. 10k-row default batches would be
 #: 10 GB+ on crawl data; 64 rows × ~1 MB keeps worker RSS bounded.
 ARROW_BATCH_FOR_HTML = 64
+
+#: Schema of the committed output: the extract columns plus the
+#: ``part_id`` partition column.  The job's own read-backs pass it, so
+#: they skip the schema-inference job over the file footers.
+OUTPUT_SCHEMA = StructType(
+    EXTRACT_SCHEMA.fields + [StructField("part_id", IntegerType(), True)]
+)
+
+#: The per-bucket manifest columns and their types; resume reads
+#: ``part_id``/``num_buckets``/``salt_seed``, the rest are the metrics.
+_COUNT_COLS = ("docs", "bytes_in", "errors", "attempts_total")
+_MS_COLS = ("extract_ms_total", "extract_ms_max")
+
+
+def _manifest_arrow_schema():
+    import pyarrow as pa
+
+    return pa.schema(
+        [("part_id", pa.int32())]
+        + [(c, pa.int64()) for c in _COUNT_COLS]
+        + [(c, pa.float64()) for c in _MS_COLS]
+        + [
+            ("completed_at", pa.timestamp("us", tz="UTC")),
+            ("num_buckets", pa.int32()),
+            ("salt_seed", pa.int32()),
+        ]
+    )
 
 
 @dataclass
@@ -96,23 +132,35 @@ def with_bucket(pages: DataFrame, num_buckets: int, seed: int = 42) -> DataFrame
     )
 
 
-def _try_read_parquet(spark: SparkSession, path: str) -> Optional[DataFrame]:
+def _try_read_parquet(
+    spark: SparkSession, path: str, schema: Optional[StructType] = None
+) -> Optional[DataFrame]:
     """Filesystem-agnostic existence probe + read.  ``os.path.exists`` is
     driver-local — always False for hdfs://, s3a://, etc. — which would make
-    resume dedup silently never engage on a real cluster.  Letting the scan
-    itself fail (AnalysisException: PATH_NOT_FOUND) works on any
-    Hadoop-compatible filesystem.
+    resume dedup silently never engage on a real cluster.  The probe is
+    one Hadoop-FS ``globStatus`` call instead — the same glob expansion
+    ``spark.read`` applies, on any Hadoop-compatible filesystem — so a
+    path that matches nothing returns None without a Spark analysis.
 
-    ONLY the path-missing condition maps to None ("no committed output
-    yet").  Every other failure — credential errors, corrupt footers, a
-    transient store throttle surfacing as an analysis error — re-raises:
-    swallowing it would silently disable the committed-rows anti-join on a
-    resume run and the rerun would append duplicate rows, breaking the
-    exactly-once guarantee this module documents."""
+    ``schema``: the known schema of the data, when the caller has it —
+    the read then skips the footer-scanning schema-inference job, and an
+    existing directory without data files reads as an empty DataFrame.
+
+    Past the probe, ONLY the path-missing conditions map to None ("no
+    committed output yet").  Every other failure — credential errors,
+    corrupt footers, a transient store throttle surfacing as an analysis
+    error — re-raises: swallowing it would silently disable the
+    committed-rows anti-join on a resume run and the rerun would append
+    duplicate rows, breaking the exactly-once guarantee this module
+    documents."""
     from pyspark.errors import AnalysisException
 
+    jvm, fs = snaplog._fs(spark, path)
+    if not fs.globStatus(jvm.org.apache.hadoop.fs.Path(path)):
+        return None
     try:
-        df = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         df.schema  # force resolution so a missing path fails here
         return df
     except AnalysisException as e:
@@ -120,6 +168,8 @@ def _try_read_parquet(spark: SparkSession, path: str) -> Optional[DataFrame]:
             e, "getErrorClass", lambda: None
         )
         cond = get_cond() or ""
+        # the path vanished between the probe and the read (a concurrent
+        # cleanup): same answer the probe would have given
         if cond == "PATH_NOT_FOUND":
             return None
         # an existing directory with NO readable parquet data — exactly
@@ -143,6 +193,57 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> Optional[DataFrame
     return _try_read_parquet(spark, manifest_path)
 
 
+def _wave_manifest_rows(
+    committed_out: Optional[DataFrame],
+    wave_buckets: list,
+    *,
+    dedupe: bool,
+    num_buckets: int,
+    salt_seed: int,
+) -> list:
+    """One manifest row (a dict in :func:`_manifest_arrow_schema` order)
+    per bucket of the wave, from the committed rows of those buckets.
+
+    One Spark action: a column- and partition-pruned ``groupBy(part_id)``
+    whose at most ``len(wave_buckets)`` result rows are collected.  A
+    bucket with no rows still completed and gets an explicit zero row —
+    without it the bucket never enters the done set and every resume
+    re-runs it forever (sparse url hashing, filtered-out waves).  Every
+    bucket goes through the same builder, so the column types never
+    depend on whether the wave found any output."""
+    agg: dict = {}
+    if committed_out is not None:
+        out = committed_out.select(
+            "part_id", "url", "error", "attempts", "extract_ms", "html_bytes"
+        ).filter(F.col("part_id").isin(wave_buckets))
+        if dedupe:
+            # compacted-but-not-yet-vacuumed buckets: raw ∪ staged holds
+            # each url twice (identical rows) — count once.  Only paid
+            # when a compaction is actually in play; the shuffle is
+            # bounded by this wave's partition-pruned rows.
+            out = out.dropDuplicates(["part_id", "url"])
+        for r in out.groupBy("part_id").agg(
+            F.count("*").alias("docs"),
+            F.sum("html_bytes").alias("bytes_in"),
+            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
+            F.sum("attempts").alias("attempts_total"),
+            F.sum("extract_ms").alias("extract_ms_total"),
+            F.max("extract_ms").alias("extract_ms_max"),
+        ).collect():
+            agg[r.part_id] = r.asDict()
+    ts = snaplog._now_utc()
+    rows = []
+    for b in wave_buckets:
+        got = agg.get(b, {})
+        row = {"part_id": int(b)}
+        # a sum over all-null values is null: report it as 0
+        row.update({c: int(got.get(c) or 0) for c in _COUNT_COLS})
+        row.update({c: float(got.get(c) or 0.0) for c in _MS_COLS})
+        row.update(completed_at=ts, num_buckets=num_buckets, salt_seed=salt_seed)
+        rows.append(row)
+    return rows
+
+
 def run_extract_job(
     spark: SparkSession,
     pages: DataFrame,
@@ -161,8 +262,6 @@ def run_extract_job(
     snapshots: bool = True,  # commit a file-manifest snapshot per wave
     # (plans/snapshots.py) so readers can pin an as-of view of the output
     spread_skew: bool = False,  # opt-in input-side skew spreader, see below
-    # deprecated alias (kept for callers written against the shuffle design)
-    num_partitions: Optional[int] = None,
 ) -> ExtractJobResult:
     """The flagship job.  ``pages``: DataFrame with (url, html[, lang...]).
 
@@ -178,8 +277,6 @@ def run_extract_job(
     free.  Turn it on when task-duration skew, not total throughput, is
     the bottleneck."""
     tune_session_for_extraction(spark)
-    if num_partitions is not None:
-        num_buckets = num_partitions
     manifest_path = manifest_path or output_path.rstrip("/") + "_manifest"
     config = config or Configuration(
         fix_relative_urls=True, article_byline=True, substitute_entities=True
@@ -205,27 +302,27 @@ def run_extract_job(
         # bucket ids are only meaningful under the same (num_buckets, seed):
         # refuse to resume across a bucketing change rather than silently
         # treating aliased ids as complete
-        cfg_row = manifest.select("num_buckets", "salt_seed").first()
-        if cfg_row is not None and (
-            cfg_row.num_buckets != num_buckets or cfg_row.salt_seed != salt_seed
-        ):
-            raise ValueError(
-                f"manifest at {manifest_path} was written with "
-                f"num_buckets={cfg_row.num_buckets}, seed={cfg_row.salt_seed}; "
-                f"this run uses num_buckets={num_buckets}, seed={salt_seed}. "
-                "Use a fresh output/manifest path or the original bucketing."
-            )
-        done_df = manifest.select("part_id").distinct()
-        done = {r.part_id for r in done_df.collect()}  # tiny: one id per bucket
-        skipped = len(done)
-        done_ids = done
+        # one collect: a few rows per bucket at most, three int columns
+        rows = manifest.select("part_id", "num_buckets", "salt_seed").collect()
+        for r in rows:
+            if r.num_buckets != num_buckets or r.salt_seed != salt_seed:
+                raise ValueError(
+                    f"manifest at {manifest_path} was written with "
+                    f"num_buckets={r.num_buckets}, seed={r.salt_seed}; "
+                    f"this run uses num_buckets={num_buckets}, seed={salt_seed}. "
+                    "Use a fresh output/manifest path or the original bucketing."
+                )
+        done_ids = {r.part_id for r in rows}
+        skipped = len(done_ids)
 
     # Snapshot of rows committed by PREVIOUS runs (file listing is resolved
     # at read time, so this never sees this run's own appends).  Gated on
     # output existence alone — NOT on the manifest: a crash between the
     # first data append and the first manifest append leaves committed rows
     # with no manifest at all, and rerunning must still not duplicate them.
-    committed = _try_read_parquet(spark, output_path) if resume else None
+    committed = (
+        _try_read_parquet(spark, output_path, OUTPUT_SCHEMA) if resume else None
+    )
     # After compact+vacuum maintenance, some buckets' live rows exist
     # ONLY under the _compacted staging dir, which a raw directory read
     # skips.  The staged view is computed once (the compacted set cannot
@@ -236,9 +333,9 @@ def run_extract_job(
     # _compacted reports zero docs/bytes in the manifest).
     staged = None
     if snapshots:
-        from .snapshots import _read_file_rows, live_compacted_files
-
-        staged = _read_file_rows(spark, live_compacted_files(spark, output_path))
+        staged = snaplog._read_file_rows(
+            spark, snaplog.live_compacted_files(spark, output_path)
+        )
     if resume and staged is not None:
         committed = (
             staged
@@ -252,11 +349,9 @@ def run_extract_job(
     last_snapshot_id = None
     snap_cache = None
     if snapshots:
-        from .snapshots import SnapshotLogCache, commit_snapshot
-
         # one driver-side log read for the whole run; every wave's commit
         # extends the cache locally instead of re-reading the log
-        snap_cache = SnapshotLogCache()
+        snap_cache = snaplog.SnapshotLogCache()
     for lo in range(0, num_buckets, wave_size):
         hi = min(lo + wave_size, num_buckets)
         wave_buckets = [b for b in range(lo, hi) if not (done_ids and b in done_ids)]
@@ -303,17 +398,10 @@ def run_extract_job(
         waves_run += 1
         buckets_done += len(wave_buckets)
 
-        # per-bucket lineage/metrics → manifest (append).  Column-pruned,
-        # partition-pruned read-back: only this wave's part_id directories.
-        # a bucket (or whole wave) that produced ZERO rows still
-        # completed — without explicit zero rows it never enters done_ids
-        # and every resume re-runs it forever (sparse url hashing,
-        # filtered-out waves); a fully-empty output also can't even be
-        # read back (_try_read_parquet → None)
-        all_ids = spark.createDataFrame(
-            [(int(b),) for b in wave_buckets], "part_id int"
-        )
-        committed_out = _try_read_parquet(spark, output_path)
+        # per-bucket lineage/metrics → manifest rows, from the committed
+        # files of this wave's buckets (rows of earlier runs included):
+        # column- and partition-pruned, read with the known schema.
+        committed_out = _try_read_parquet(spark, output_path, OUTPUT_SCHEMA)
         dedupe_metrics = False
         if staged is not None:
             # same union as the resume path: a resumed bucket whose live
@@ -321,7 +409,7 @@ def run_extract_job(
             # BEFORE vacuum deletes the originals, the raw directory read
             # still sees the rows a compaction rewrote into _compacted —
             # the union would count those urls twice, so the metrics agg
-            # below dedupes by (part_id, url).  Compaction rewrites rows
+            # dedupes by (part_id, url).  Compaction rewrites rows
             # verbatim, so one-row-per-url IS the live view either side
             # of the vacuum.
             dedupe_metrics = committed_out is not None
@@ -330,53 +418,10 @@ def run_extract_job(
                 if committed_out is None
                 else committed_out.unionByName(staged, allowMissingColumns=True)
             )
-        if committed_out is None:
-            metrics = all_ids.select(
-                "part_id",
-                F.lit(0).cast("long").alias("docs"),
-                F.lit(0).cast("long").alias("bytes_in"),
-                F.lit(0).cast("long").alias("errors"),
-                F.lit(0).cast("long").alias("attempts_total"),
-                F.lit(0).cast("long").alias("extract_ms_total"),
-                F.lit(0).cast("long").alias("extract_ms_max"),
-                F.current_timestamp().alias("completed_at"),
-                F.lit(num_buckets).alias("num_buckets"),
-                F.lit(salt_seed).alias("salt_seed"),
-            )
-        else:
-            out = committed_out.select(
-                "part_id", "url", "error", "attempts", "extract_ms", "html_bytes"
-            ).filter(F.col("part_id").isin(wave_buckets))
-            if dedupe_metrics:
-                # compacted-but-not-yet-vacuumed buckets: raw ∪ staged
-                # holds each url twice (identical rows) — count once.
-                # Only paid when a compaction is actually in play; the
-                # shuffle is bounded by this wave's partition-pruned rows.
-                out = out.dropDuplicates(["part_id", "url"])
-            out = out.drop("url")
-            agg = out.groupBy("part_id").agg(
-                F.count("*").alias("docs"),
-                F.sum("html_bytes").alias("bytes_in"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
-                F.sum("attempts").alias("attempts_total"),
-                F.sum("extract_ms").alias("extract_ms_total"),
-                F.max("extract_ms").alias("extract_ms_max"),
-            )
-            metrics = (
-                all_ids.join(agg, "part_id", "left")
-                .fillna(
-                    0,
-                    subset=["docs", "bytes_in", "errors", "attempts_total",
-                            "extract_ms_total", "extract_ms_max"],
-                )
-                .select(
-                    "part_id", "docs", "bytes_in", "errors", "attempts_total",
-                    "extract_ms_total", "extract_ms_max",
-                    F.current_timestamp().alias("completed_at"),
-                    F.lit(num_buckets).alias("num_buckets"),
-                    F.lit(salt_seed).alias("salt_seed"),
-                )
-            )
+        manifest_rows = _wave_manifest_rows(
+            committed_out, wave_buckets, dedupe=dedupe_metrics,
+            num_buckets=num_buckets, salt_seed=salt_seed,
+        )
         # snapshot BEFORE the manifest append: the manifest is what resume
         # trusts, so it must be the LAST thing a wave commits.  A crash
         # after the snapshot but before the manifest leaves the bucket
@@ -385,11 +430,14 @@ def run_extract_job(
         # manifest append completes; the reverse order would leave files
         # that are manifest-done but invisible to every future snapshot.
         if snapshots:
-            last_snapshot_id = commit_snapshot(
+            last_snapshot_id = snaplog.commit_snapshot(
                 spark, output_path, wave_buckets, cache=snap_cache
             )
-
-        metrics.write.mode("append").parquet(manifest_path)
+        # one small parquet file, appended from the driver (no Spark job)
+        snaplog.append_parquet_rows(
+            spark, manifest_path, "manifest", manifest_rows,
+            _manifest_arrow_schema(),
+        )
 
     if snapshots and not last_snapshot_id:
         # normalize the no-commit cases so callers can rely on "non-None
@@ -398,9 +446,7 @@ def run_extract_job(
         # committed nothing (fully filtered) reports None, same as
         # snapshotting disabled — commit_snapshot's raw return there is 0,
         # an id read_snapshot rejects
-        from .snapshots import _last_sid, _read_log_rows
-
-        sid = _last_sid(_read_log_rows(spark, output_path))
+        sid = snaplog._last_sid(snaplog._read_log_rows(spark, output_path))
         last_snapshot_id = sid if sid > 0 else None
 
     return ExtractJobResult(

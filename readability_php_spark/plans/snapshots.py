@@ -269,15 +269,24 @@ def _read_log_rows(spark: SparkSession, output_path: str) -> Optional[list]:
     return rows
 
 
-def _append_log_rows(spark: SparkSession, output_path: str, rows: list) -> None:
-    """Write ONE new log file holding ``rows`` (dicts matching the log
-    schema).  Temp-name + rename so a torn write is never visible."""
+def append_parquet_rows(
+    spark: SparkSession, dir_path: str, stem: str, rows: list, schema
+) -> None:
+    """Write ONE new parquet file holding ``rows`` (dicts matching the
+    pyarrow ``schema``) into ``dir_path``, from the driver: no Spark job.
+    The file is written under a dot-prefixed temp name, then renamed to
+    ``{stem}-{uuid}.parquet`` — atomic on local/HDFS, and every reader
+    (Spark listing, pyarrow datasets, :func:`_list_dir_parquet`) skips
+    dot/underscore files, so a torn write is never visible.  Local paths
+    use plain ``os`` I/O; remote schemes copy one local file through the
+    Hadoop FS API.  Shared by the snapshot log and the extract job's
+    per-bucket manifest (plans/pipeline.py), the two small metadata
+    appends a wave commits."""
     pa, pq = _pa()
-    table = pa.Table.from_pylist(rows, schema=_log_arrow_schema())
-    log_dir = _log_path(output_path)
-    name = f"log-{rows[0]['snapshot_id']:08d}-{uuid.uuid4().hex}.parquet"
-    if _is_local(log_dir):
-        d = _local(log_dir)
+    table = pa.Table.from_pylist(rows, schema=schema)
+    name = f"{stem}-{uuid.uuid4().hex}.parquet"
+    if _is_local(dir_path):
+        d = _local(dir_path)
         os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, "." + name + ".inprogress")
         pq.write_table(table, tmp)
@@ -285,19 +294,26 @@ def _append_log_rows(spark: SparkSession, output_path: str, rows: list) -> None:
         return
     import tempfile
 
-    jvm, fs = _fs(spark, log_dir)
-    dir_p = jvm.org.apache.hadoop.fs.Path(log_dir)
-    fs.mkdirs(dir_p)
+    jvm, fs = _fs(spark, dir_path)
+    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(dir_path))
     with tempfile.TemporaryDirectory() as td:
         local = os.path.join(td, name)
         pq.write_table(table, local)
         tmp_remote = jvm.org.apache.hadoop.fs.Path(
-            f"{log_dir}/.{name}.inprogress"
+            f"{dir_path}/.{name}.inprogress"
         )
         fs.copyFromLocalFile(
             False, True, jvm.org.apache.hadoop.fs.Path("file:" + local), tmp_remote
         )
-        fs.rename(tmp_remote, jvm.org.apache.hadoop.fs.Path(f"{log_dir}/{name}"))
+        fs.rename(tmp_remote, jvm.org.apache.hadoop.fs.Path(f"{dir_path}/{name}"))
+
+
+def _append_log_rows(spark: SparkSession, output_path: str, rows: list) -> None:
+    """One log file per commit, named after its snapshot id."""
+    append_parquet_rows(
+        spark, _log_path(output_path), f"log-{rows[0]['snapshot_id']:08d}",
+        rows, _log_arrow_schema(),
+    )
 
 
 def _require_log_rows(spark: SparkSession, output_path: str) -> list:

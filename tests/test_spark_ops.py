@@ -44,6 +44,53 @@ CFG = Configuration(
     fix_relative_urls=True, article_byline=True, substitute_entities=True
 )
 
+#: rows in :func:`generated_pages_df`, the pipeline tests' corpus
+GEN_DOCS = 48
+
+_GEN_WORDS = (
+    "harbor council budget river station museum archive engineer "
+    "weather season market report village bridge library garden "
+    "festival teacher journey history climate railway orchard summit "
+    "lantern meadow quarry ferry canal workshop"
+).split()
+
+
+def generated_pages_df(spark, n: int = GEN_DOCS):
+    """A small deterministic corpus built in the test itself: ``n`` pages
+    ``(url, html, lang)``.  Most are an article of a few paragraphs inside
+    nav/sidebar/footer boilerplate; every seventh has too little text for
+    the article threshold (so it runs the retry ladder), and every
+    eleventh is unparseable markup (an ``error`` row)."""
+    import random
+
+    rng = random.Random(20261017)
+    rows = []
+    for i in range(n):
+        if i % 11 == 5:
+            html = "<html>"
+        else:
+            paras = 1 if i % 7 == 3 else rng.randint(3, 6)
+            body = "".join(
+                "<p>" + ", ".join(
+                    " ".join(rng.choice(_GEN_WORDS) for _ in range(8))
+                    for _ in range(rng.randint(2, 5))
+                ) + ".</p>"
+                for _ in range(paras)
+            )
+            html = (
+                f"<!DOCTYPE html><html><head><title>Page {i} - Gen</title>"
+                '<meta name="author" content="Gen Writer"></head><body>'
+                '<div class="nav"><a href="/">Home</a> <a href="/a">About</a>'
+                "</div>"
+                f'<div class="article"><h1>Page {i}</h1>{body}</div>'
+                '<div class="sidebar"><a href="/x">More</a></div>'
+                '<div class="footer">(c) Gen</div></body></html>'
+            )
+        rows.append(
+            (f"http://gen.test/{i}.html", html.encode(), "en" if i % 3 else "de")
+        )
+    return spark.createDataFrame(rows, "url string, html binary, lang string")
+
 
 # the session-scoped `spark` fixture lives in conftest.py (shared with
 # test_jpeg.py and any future Spark-touching test module)
@@ -83,19 +130,19 @@ def test_extract_operator_bad_rows_dont_kill_job(spark):
 
 def test_pipeline_resume(spark, tmp_path):
     out_dir = str(tmp_path / "out")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     res1 = run_extract_job(spark, pages, out_dir, num_buckets=8, config=CFG)
     assert res1.buckets_done == 8 and res1.buckets_skipped == 0
     n1 = spark.read.parquet(out_dir).count()
-    assert n1 == 89
+    assert n1 == GEN_DOCS
     res2 = run_extract_job(spark, pages, out_dir, num_buckets=8, config=CFG)
     assert res2.buckets_skipped == 8
     # output unchanged after no-op resume
-    assert spark.read.parquet(out_dir).count() == 89
+    assert spark.read.parquet(out_dir).count() == GEN_DOCS
     # manifest has metrics for every partition
     manifest = spark.read.parquet(res1.manifest_path)
     assert manifest.select("part_id").distinct().count() == 8
-    assert manifest.agg(F.sum("docs")).first()[0] == 89
+    assert manifest.agg(F.sum("docs")).first()[0] == GEN_DOCS
 
 
 def test_pipeline_partial_resume(spark, tmp_path):
@@ -103,7 +150,7 @@ def test_pipeline_partial_resume(spark, tmp_path):
     resume recomputes exactly the missing ones."""
     out_dir = str(tmp_path / "out2")
     manifest_path = out_dir + "_manifest"
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(spark, pages, out_dir, num_buckets=8, config=CFG)
     # drop half the manifest (simulate a crash between the data append and
     # the manifest append: data committed, completion record lost)
@@ -115,8 +162,8 @@ def test_pipeline_partial_resume(spark, tmp_path):
     assert res.buckets_skipped == 4
     # exactly-once: the already-committed rows of the "lost" buckets must
     # not be duplicated by the resume
-    assert spark.read.parquet(out_dir).count() == 89
-    assert spark.read.parquet(out_dir).select("url").distinct().count() == 89
+    assert spark.read.parquet(out_dir).count() == GEN_DOCS
+    assert spark.read.parquet(out_dir).select("url").distinct().count() == GEN_DOCS
     m2 = spark.read.parquet(manifest_path)
     assert m2.select("part_id").distinct().count() == 8
 
@@ -699,17 +746,17 @@ def test_pipeline_resume_without_manifest(spark, tmp_path):
     not on the manifest)."""
     out_dir = str(tmp_path / "out3")
     manifest_path = out_dir + "_manifest"
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(spark, pages, out_dir, num_buckets=8, config=CFG)
     shutil.rmtree(manifest_path)  # the crash: manifest never landed
     res = run_extract_job(spark, pages, out_dir, num_buckets=8, config=CFG)
     assert res.buckets_skipped == 0  # no manifest -> nothing skippable
-    assert spark.read.parquet(out_dir).count() == 89
-    assert spark.read.parquet(out_dir).select("url").distinct().count() == 89
+    assert spark.read.parquet(out_dir).count() == GEN_DOCS
+    assert spark.read.parquet(out_dir).select("url").distinct().count() == GEN_DOCS
     # manifest rebuilt, and its doc counts cover the committed rows exactly
     m = spark.read.parquet(manifest_path)
     assert m.select("part_id").distinct().count() == 8
-    assert m.agg(F.sum("docs")).first()[0] == 89
+    assert m.agg(F.sum("docs")).first()[0] == GEN_DOCS
 
 
 def test_pipeline_output_partitioned_by_bucket(spark, tmp_path):
@@ -717,7 +764,7 @@ def test_pipeline_output_partitioned_by_bucket(spark, tmp_path):
     resume anti-joins prune to the wave's own directories instead of
     rescanning the full accumulated output."""
     out_dir = str(tmp_path / "out4")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(spark, pages, out_dir, num_buckets=4, config=CFG, waves=4)
     subdirs = {d for d in os.listdir(out_dir) if d.startswith("part_id=")}
     assert subdirs == {f"part_id={b}" for b in range(4)}
@@ -747,7 +794,7 @@ def test_resume_probes_treat_empty_dirs_as_absent(spark, tmp_path):
     assert _try_read_parquet(spark, str(empty)) is None
     # end-to-end: a filter matching zero rows creates the empty-output
     # state; the rerun must resume cleanly instead of aborting
-    pages = fixture_corpus_df(spark, replicas=1).withColumn("lang", F.lit("en"))
+    pages = generated_pages_df(spark).withColumn("lang", F.lit("en"))
     out_dir = str(tmp_path / "zero_out")
     res1 = run_extract_job(
         spark, pages, out_dir, num_buckets=4, config=CFG,
@@ -776,7 +823,7 @@ def test_resume_after_compact_vacuum_no_duplicates(spark, tmp_path):
     )
 
     out_dir = str(tmp_path / "rv_out")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(
         spark, pages, out_dir, num_buckets=2, config=CFG, files_per_bucket=3
     )
@@ -789,8 +836,8 @@ def test_resume_after_compact_vacuum_no_duplicates(spark, tmp_path):
     from readability_php_spark.plans.pipeline import _try_read_parquet
 
     raw = _try_read_parquet(spark, out_dir)
-    assert raw is None or raw.count() < 89
-    assert read_snapshot(spark, out_dir).count() == 89
+    assert raw is None or raw.count() < GEN_DOCS
+    assert read_snapshot(spark, out_dir).count() == GEN_DOCS
     # resume with a FRESH manifest (simulating a crash-window rerun where
     # manifest state was lost): committed-rows anti-join must cover the
     # vacuumed buckets via the snapshot log, so nothing is re-extracted
@@ -798,7 +845,7 @@ def test_resume_after_compact_vacuum_no_duplicates(spark, tmp_path):
         spark, pages, out_dir, num_buckets=2, config=CFG,
         manifest_path=str(tmp_path / "m_fresh"),
     )
-    assert read_snapshot(spark, out_dir).count() == 89  # no dupes
+    assert read_snapshot(spark, out_dir).count() == GEN_DOCS  # no dupes
     assert res.last_snapshot_id == sid  # nothing new → log max reported
 
 
@@ -814,7 +861,7 @@ def test_resume_metrics_compact_before_vacuum_not_doubled(spark, tmp_path):
     )
 
     out_dir = str(tmp_path / "cm_out")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(
         spark, pages, out_dir, num_buckets=2, config=CFG, files_per_bucket=3
     )
@@ -826,9 +873,9 @@ def test_resume_metrics_compact_before_vacuum_not_doubled(spark, tmp_path):
         spark, pages, out_dir, num_buckets=2, config=CFG,
         manifest_path=str(tmp_path / "m_fresh"),
     )
-    assert read_snapshot(spark, out_dir).count() == 89  # data exactly-once
+    assert read_snapshot(spark, out_dir).count() == GEN_DOCS  # data exactly-once
     m = spark.read.parquet(res.manifest_path)
-    assert m.agg(F.sum("docs")).first()[0] == 89  # counted once, not 178
+    assert m.agg(F.sum("docs")).first()[0] == GEN_DOCS  # counted once, not twice
     bytes_in = m.agg(F.sum("bytes_in")).first()[0]
     direct = read_snapshot(spark, out_dir).agg(F.sum("html_bytes")).first()[0]
     assert bytes_in == direct
@@ -839,7 +886,7 @@ def test_extract_job_snapshot_id_contract(spark, tmp_path):
     accepts.  A fully-filtered fresh run (no files ever committed) must
     report None even with snapshots enabled; an all-skipped resume must
     report the pre-existing log's max id."""
-    pages = fixture_corpus_df(spark, replicas=1).withColumn("lang", F.lit("en"))
+    pages = generated_pages_df(spark).withColumn("lang", F.lit("en"))
     out_dir = str(tmp_path / "c_out")
     res = run_extract_job(
         spark, pages, out_dir, num_buckets=2, config=CFG, lang_filter="xx"
@@ -856,7 +903,7 @@ def test_snapshot_unknown_id_rejected(spark, tmp_path):
     from readability_php_spark.plans.snapshots import diff_snapshots, read_snapshot
 
     out_dir = str(tmp_path / "sv_out")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(spark, pages, out_dir, num_buckets=2, config=CFG)
     with pytest.raises(ValueError, match="unknown snapshot_id"):
         read_snapshot(spark, out_dir, 500)
@@ -956,7 +1003,7 @@ def test_snapshot_log_time_travel(spark, tmp_path):
     from readability_php_spark.plans.snapshots import read_snapshot, snapshots
 
     out_dir = str(tmp_path / "snap_out")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     res = run_extract_job(
         spark, pages, out_dir, num_buckets=4, config=CFG, waves=2
     )
@@ -968,7 +1015,7 @@ def test_snapshot_log_time_travel(spark, tmp_path):
     s1 = read_snapshot(spark, out_dir, 1)
     s2 = read_snapshot(spark, out_dir, 2)
     n1, n2 = s1.count(), s2.count()
-    assert 0 < n1 < n2 == 89
+    assert 0 < n1 < n2 == GEN_DOCS
     # snapshot 1 covers exactly wave 1's buckets
     assert {r.part_id for r in s1.select("part_id").distinct().collect()} == {0, 1}
     # a second full run APPENDS duplicates (resume off, fresh manifest) —
@@ -977,10 +1024,10 @@ def test_snapshot_log_time_travel(spark, tmp_path):
         spark, pages, out_dir, num_buckets=4, config=CFG,
         resume=False, manifest_path=str(tmp_path / "m2"),
     )
-    assert spark.read.parquet(out_dir).count() == 178  # raw table: dupes
-    assert read_snapshot(spark, out_dir, 2).count() == 89  # pinned: isolated
+    assert spark.read.parquet(out_dir).count() == 2 * GEN_DOCS  # raw table: dupes
+    assert read_snapshot(spark, out_dir, 2).count() == GEN_DOCS  # pinned: isolated
     latest = read_snapshot(spark, out_dir)
-    assert latest.count() == 178
+    assert latest.count() == 2 * GEN_DOCS
     # as-of rows are the real extraction output (schema + content intact)
     assert s2.filter(F.col("extracted_text").isNotNull()).count() > 0
 
@@ -1023,7 +1070,7 @@ def test_snapshot_diff_change_feed(spark, tmp_path):
     )
 
     out_dir = str(tmp_path / "diff_out")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(
         spark, pages, out_dir, num_buckets=4, config=CFG, waves=2,
         files_per_bucket=2,
@@ -1111,7 +1158,7 @@ def test_snapshot_compaction_and_vacuum(spark, tmp_path):
     )
 
     out_dir = str(tmp_path / "comp_out")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     # files_per_bucket=4 -> many small files per bucket, the compaction case
     run_extract_job(
         spark, pages, out_dir, num_buckets=2, config=CFG, files_per_bucket=4
@@ -1303,7 +1350,7 @@ def test_streaming_rollup_plan_is_streaming(spark, tmp_path):
 
 def test_resume_refuses_bucketing_change(spark, tmp_path):
     out_dir = str(tmp_path / "out3")
-    pages = fixture_corpus_df(spark, replicas=1)
+    pages = generated_pages_df(spark)
     run_extract_job(spark, pages, out_dir, num_buckets=16, config=CFG)
     with pytest.raises(ValueError, match="num_buckets"):
         run_extract_job(spark, pages, out_dir, num_buckets=8, config=CFG)
@@ -1641,6 +1688,110 @@ def test_try_read_parquet_missing_vs_corrupt(spark, tmp_path):
     (bad / "part-00000.parquet").write_bytes(b"definitely not a parquet footer")
     with pytest.raises(Exception):
         _try_read_parquet(spark, str(bad))
+
+
+def test_try_read_parquet_probes_before_reading(spark, tmp_path, monkeypatch):
+    """The Hadoop-FS probe answers 'absent' without a Spark analysis; a
+    dataless directory still maps to None; a glob that matches files
+    reads them all, as ``spark.read`` would."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from readability_php_spark.plans.pipeline import _try_read_parquet
+
+    def _no_read(*_a, **_k):
+        raise AssertionError("absent path reached spark.read")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", _no_read)
+    assert _try_read_parquet(spark, str(tmp_path / "nope")) is None
+    assert _try_read_parquet(spark, str(tmp_path / "nope-*")) is None
+    monkeypatch.undo()
+
+    empty = tmp_path / "only_success"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    assert _try_read_parquet(spark, str(empty)) is None
+
+    for k in range(3):
+        spark.range(k * 10, k * 10 + 10).write.parquet(str(tmp_path / f"t{k}"))
+    got = _try_read_parquet(spark, str(tmp_path / "t*"))
+    assert got is not None and got.count() == 30
+    assert _try_read_parquet(spark, str(tmp_path / "t{0,2}")).count() == 20
+
+
+def test_append_parquet_rows_local_and_hadoop_fs(spark, tmp_path, monkeypatch):
+    """The driver-side appender (snapshot log and manifest) writes one
+    visible parquet file per call through both of its branches: plain os
+    I/O for local paths, and the Hadoop FS API for remote schemes — the
+    latter driven here by routing a file: URI through it."""
+    import pyarrow as pa
+
+    from readability_php_spark.plans import snapshots as snap
+
+    schema = pa.schema([("k", pa.int32()), ("v", pa.float64())])
+    local_dir = str(tmp_path / "local")
+    snap.append_parquet_rows(spark, local_dir, "m", [{"k": 1, "v": 0.5}], schema)
+    monkeypatch.setattr(snap, "_is_local", lambda _p: False)
+    hadoop_dir = "file:" + str(tmp_path / "hadoop")
+    for k in (2, 3):
+        snap.append_parquet_rows(spark, hadoop_dir, "m", [{"k": k, "v": 1.0}], schema)
+    assert len(snap._list_dir_parquet(spark, hadoop_dir)) == 2
+    monkeypatch.undo()
+    for d, want in ((local_dir, [1]), (hadoop_dir, [2, 3])):
+        names = os.listdir(snap._local(d))
+        assert not [n for n in names if n.endswith(".inprogress")]
+        got = spark.read.parquet(d)
+        assert [r.k for r in got.orderBy("k").collect()] == want
+        assert dict(got.dtypes) == {"k": "int", "v": "double"}
+
+
+def test_manifest_types_stable_when_first_wave_is_empty(spark, tmp_path):
+    """A wave whose buckets hold no committed output writes the same
+    manifest column types as every other wave: here all pages hash to
+    the second wave's buckets, so the first wave commits only zero rows.
+    The manifest must read back whole and a resume must succeed."""
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        LongType,
+        TimestampType,
+    )
+
+    from readability_php_spark.plans.pipeline import with_bucket
+
+    pages = (
+        with_bucket(generated_pages_df(spark, n=60), 64)
+        .filter(F.col("part_id") >= 32)
+        .drop("part_id")
+    )
+    n = pages.count()
+    assert n > 0
+    out_dir = str(tmp_path / "hi_out")
+    res = run_extract_job(
+        spark, pages, out_dir, num_buckets=64, config=CFG, waves=2
+    )
+    assert res.buckets_done == 64
+    again = run_extract_job(
+        spark, pages, out_dir, num_buckets=64, config=CFG, waves=2
+    )
+    assert again.buckets_skipped == 64
+    m = spark.read.parquet(res.manifest_path)
+    assert {f.name: f.dataType for f in m.schema.fields} == {
+        "part_id": IntegerType(),
+        "docs": LongType(),
+        "bytes_in": LongType(),
+        "errors": LongType(),
+        "attempts_total": LongType(),
+        "extract_ms_total": DoubleType(),
+        "extract_ms_max": DoubleType(),
+        "completed_at": TimestampType(),
+        "num_buckets": IntegerType(),
+        "salt_seed": IntegerType(),
+    }
+    rows = m.collect()  # every file, every column
+    assert len(rows) == 64
+    assert sum(r.docs for r in rows) == n
+    assert sum(r.extract_ms_total for r in rows if r.part_id < 32) == 0.0
+    assert spark.read.parquet(out_dir).count() == n
 
 
 def test_pack_documents_bucketed_invariants(spark):
