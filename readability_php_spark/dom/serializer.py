@@ -104,6 +104,3 @@ def _ser_element(el: Element, out: list[str]) -> None:
         for c in reversed(children):
             stack.append(("open", c))
 
-
-def inner_text(node: Node) -> str:
-    return node.text_content

@@ -19,7 +19,7 @@ from __future__ import annotations
 from typing import Callable, Iterator, Optional, Union
 
 from ..dom import node as _node_mod
-from ..dom.node import ELEMENT_NODE, TEXT_NODE, Element, Node, Text
+from ..dom.node import ELEMENT_NODE, TEXT_NODE, Element, Node
 from .regexes import REGEXPS
 
 #: PHP trim() default character list (" \t\n\r\0\x0B") — NOT Unicode-aware;
@@ -476,12 +476,3 @@ def count_desc(root: Element, tags: tuple) -> dict:
                 continue
         n = n.next
     return counts
-
-
-def create_node(original: Node, tag: str) -> Element:
-    # NodeTrait.php:370-381 — new element carrying the text content
-    el = Element(tag)
-    text = get_text_content(original)
-    if text:
-        el.append_child(Text(text))
-    return el

@@ -12,7 +12,12 @@ Scale design (north rule):
   column — a bad page can never kill the job;
 - lineage/metrics ride along as columns (``partition_id``, ``html_bytes``,
   ``extract_ms``) and are aggregated into the per-partition manifest by
-  plans/pipeline.py.
+  plans/pipeline.py;
+- each task ends by dropping the worker's import finders for package
+  directories inside archives (``deploy.drop_archive_dir_finders_after``):
+  the reused worker calls ``importlib.invalidate_caches()`` before its
+  next task, which re-reads the archive behind every cached finder
+  (measured at 118-207 ms per call with them, about 41 ms without).
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import Configuration
+from ..deploy import drop_archive_dir_finders_after
 from ..kernel import extract as kernel_extract
 from ..sources.charset import sniff_decode
 
@@ -68,6 +74,7 @@ def make_extract_batches(
     ``carry``: input columns echoed through unchanged (e.g. warc_ts for
     streaming watermarks)."""
 
+    @drop_archive_dir_finders_after
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1

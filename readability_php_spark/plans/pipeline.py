@@ -38,9 +38,10 @@ Scale reasoning (explicitly, for the 1000-executor / 100 TB case):
   manifest rows are then appended from the driver as one small parquet
   file (``snapshots.append_parquet_rows``, the snapshot log's appender),
   so committing a wave's metadata costs one Spark action, not a write
-  job.  Files per wave = buckets-in-wave x ``files_per_bucket`` (the
-  pre-write repartition aligns rows to writers), so file counts stay
-  bounded at any corpus size.
+  job.  Files per wave ≤ buckets-in-wave x ``files_per_bucket`` (the
+  pre-write repartition gives each (bucket, salt) key one writer, and
+  deals the keys over at most one write task per core), so file counts
+  stay bounded at any corpus size.
 - The sink is parquet (no Iceberg runtime in this sandbox); append-commit +
   manifest is the Iceberg snapshot pattern — ``.writeTo(tbl).append()`` is
   a drop-in swap.  ``plans/snapshots.py`` supplies the remaining Iceberg
@@ -380,19 +381,27 @@ def run_extract_job(
         # of a 255 MB corpus) — never the input: a pre-extraction shuffle
         # scales with input bytes (measured 15-18 s per 0.5 GB of raw HTML),
         # this one with output bytes.  It buys (a) directory-pruned resume +
-        # metrics reads via partitionBy, and (b) bounded file counts:
-        # buckets x files_per_bucket per wave instead of one file per
+        # metrics reads via partitionBy, and (b) bounded file counts: at
+        # most buckets x files_per_bucket per wave instead of one file per
         # (task, bucket) — the unshuffled partitionBy write measured 3-4x
         # slower on the bench corpus and produced one tiny file per doc.
-        fpb = files_per_bucket or max(
-            1, spark.sparkContext.defaultParallelism // max(len(wave_buckets), 1)
-        )
-        extracted = extracted.repartition(
-            len(wave_buckets) * fpb,
-            F.col("part_id"),
-            # salt: intra-bucket writer parallelism (without it, writers per
-            # wave = buckets in wave — far below cluster cores at scale)
-            F.pmod(F.xxhash64(F.col("url"), F.lit(7)), F.lit(fpb)),
+        cores = spark.sparkContext.defaultParallelism
+        fpb = files_per_bucket or max(1, cores // max(len(wave_buckets), 1))
+        # dense writer key = (bucket's position in the wave) x fpb + salt;
+        # the salt gives a bucket up to fpb writers (without it, writers
+        # per wave = buckets in wave — far below cluster cores at scale).
+        # repartitionById deals the keys round-robin over min(keys, cores)
+        # tasks: every task gets keys, and a bucket's fpb keys land in at
+        # most fpb tasks, so at most fpb files per bucket directory.  A
+        # hash repartition into one task per key ran 16 write tasks on 4
+        # cores, about 7 of them empty, each still paying its fixed
+        # start-up cost (~40 ms of write-description deserialization).
+        slot = F.array_position(
+            F.array(*[F.lit(b) for b in wave_buckets]), F.col("part_id")
+        ) - 1
+        key = slot * fpb + F.pmod(F.xxhash64(F.col("url"), F.lit(7)), F.lit(fpb))
+        extracted = extracted.repartitionById(
+            min(len(wave_buckets) * fpb, cores), key.cast("int")
         )
         extracted.write.mode("append").partitionBy("part_id").parquet(output_path)
         waves_run += 1

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..deploy import drop_archive_dir_finders_after
 from .pages import PAGES_SCHEMA
 
 _CRLF = b"\r\n"
@@ -108,6 +109,7 @@ def read_warc_directory(spark: SparkSession, path: str, glob: str = "*.warc*") -
         .select("path", "content")
     )
 
+    @drop_archive_dir_finders_after
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one yielded frame PER ARCHIVE: accumulating a whole input batch
         # of ~1 GB archives' decompressed records in one dict unbounds
@@ -180,6 +182,7 @@ def read_wet_directory(spark: SparkSession, path: str, glob: str = "*.wet*") -> 
         .select("path", "content")
     )
 
+    @drop_archive_dir_finders_after
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # per-archive yield: see read_warc_directory (bounds RSS at one
         # archive's records instead of a whole input batch's)

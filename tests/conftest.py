@@ -5,6 +5,29 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+#: the reference implementation's golden test pages; absent on machines
+#: without a reference checkout
+REFERENCE_PAGES = "/root/reference/test/test-pages"
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        f"requires_reference: needs the golden pages at {REFERENCE_PAGES}; "
+        "skipped when that directory is missing",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    if os.path.isdir(REFERENCE_PAGES):
+        return
+    skip = pytest.mark.skip(reason=f"golden pages missing: {REFERENCE_PAGES}")
+    for item in items:
+        if item.get_closest_marker("requires_reference") is not None:
+            # ahead of any other skip mark (an empty parameter set's), so
+            # this reason is the one reported
+            item.add_marker(skip, append=False)
+
 
 @pytest.fixture(scope="session")
 def spark():

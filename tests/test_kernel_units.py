@@ -133,6 +133,7 @@ def test_retry_flag_relaxation_attempts():
     assert "Real article sentence" in r.extracted_text
 
 
+@pytest.mark.requires_reference
 def test_composite_render_tostring():
     """S6 — __toString() (src/Readability.php:1680-1683): the rendered
     composite is exactly <h1>{title}</h1>{content} over a golden fixture."""

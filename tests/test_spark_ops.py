@@ -30,7 +30,6 @@ from readability_php_spark.operators.similarity import ann_topk, cosine_topk  # 
 from readability_php_spark.plans.pipeline import run_extract_job  # noqa: E402
 from readability_php_spark.sources.pages import (  # noqa: E402
     documents_corpus_df,
-    fixture_corpus_df,
     load_table,
 )
 from readability_php_spark.streaming.ingest import (  # noqa: E402
@@ -51,7 +50,8 @@ _GEN_WORDS = (
     "harbor council budget river station museum archive engineer "
     "weather season market report village bridge library garden "
     "festival teacher journey history climate railway orchard summit "
-    "lantern meadow quarry ferry canal workshop"
+    "lantern meadow quarry ferry canal workshop "
+    "the the the and and of of to with that"
 ).split()
 
 
@@ -60,7 +60,9 @@ def generated_pages_df(spark, n: int = GEN_DOCS):
     ``(url, html, lang)``.  Most are an article of a few paragraphs inside
     nav/sidebar/footer boilerplate; every seventh has too little text for
     the article threshold (so it runs the retry ladder), and every
-    eleventh is unparseable markup (an ``error`` row)."""
+    eleventh is unparseable markup (an ``error`` row).  The prose mixes
+    English stop words into the vocabulary and puts each paragraph on its
+    own line, so the extracted text passes the C4 and Gopher rules."""
     import random
 
     rng = random.Random(20261017)
@@ -70,7 +72,7 @@ def generated_pages_df(spark, n: int = GEN_DOCS):
             html = "<html>"
         else:
             paras = 1 if i % 7 == 3 else rng.randint(3, 6)
-            body = "".join(
+            body = "\n".join(
                 "<p>" + ", ".join(
                     " ".join(rng.choice(_GEN_WORDS) for _ in range(8))
                     for _ in range(rng.randint(2, 5))
@@ -757,6 +759,95 @@ def test_pipeline_resume_without_manifest(spark, tmp_path):
     m = spark.read.parquet(manifest_path)
     assert m.select("part_id").distinct().count() == 8
     assert m.agg(F.sum("docs")).first()[0] == GEN_DOCS
+
+
+def _write_stage_tasks(spark, monkeypatch, job):
+    """Run ``job()`` with each ``DataFrameWriter.parquet`` call (one per
+    wave) under its own job group; return ``job()``'s result and the task
+    count of each call's write stage — the result stage of the call's
+    last job."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    groups = []
+    real = DataFrameWriter.parquet
+
+    def grouped(self, *args, **kwargs):
+        groups.append(f"layout-write-{uuid.uuid4().hex}")
+        sc.setJobGroup(groups[-1], "extract wave write")
+        try:
+            return real(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", grouped)
+    result = job()
+    tracker = sc.statusTracker()
+    tasks = []
+    for g in groups:
+        last_job = max(tracker.getJobIdsForGroup(g))
+        write_stage = max(tracker.getJobInfo(last_job).stageIds)
+        tasks.append(tracker.getStageInfo(write_stage).numTasks)
+    return result, tasks
+
+
+@pytest.mark.parametrize(
+    "num_buckets,files_per_bucket,waves,resume_gaps",
+    [(16, None, 1, False), (2, 3, 1, False), (8, 2, 2, False), (8, 3, 1, True)],
+    ids=["16-buckets-default-fpb", "2-buckets-fpb3", "8-buckets-fpb2-2-waves",
+         "resume-with-gaps"],
+)
+def test_pipeline_write_layout_one_task_per_core(
+    spark, tmp_path, monkeypatch, num_buckets, files_per_bucket, waves,
+    resume_gaps,
+):
+    """The pre-write repartition deals each wave's (bucket, salt) writer
+    keys over at most one task per core: every wave's write stage runs at
+    most defaultParallelism tasks, every bucket directory holds at most
+    files_per_bucket files, and the manifest counts every doc once —
+    also on a resume whose wave skips done buckets."""
+    from readability_php_spark.plans.pipeline import with_bucket
+
+    cores = spark.sparkContext.defaultParallelism
+    out_dir = str(tmp_path / "layout_out")
+    manifest_path = out_dir + "_manifest"
+    pages = generated_pages_df(spark)
+    kw = dict(num_buckets=num_buckets, files_per_bucket=files_per_bucket,
+              waves=waves, config=CFG)
+    if resume_gaps:
+        # a first run commits buckets 1, 3, 4, 6 only, so the resumed wave
+        # is [0, 2, 5, 7]: bucket positions in the wave, not ids, key it
+        done = [1, 3, 4, 6]
+        first = (
+            with_bucket(pages, num_buckets)
+            .filter(F.col("part_id").isin(done))
+            .drop("part_id")
+        )
+        run_extract_job(spark, first, out_dir, **kw)
+        m = spark.read.parquet(manifest_path)
+        kept = m.filter(F.col("part_id").isin(done)).collect()
+        shutil.rmtree(manifest_path)
+        spark.createDataFrame(kept, m.schema).write.parquet(manifest_path)
+    res, tasks = _write_stage_tasks(
+        spark, monkeypatch, lambda: run_extract_job(spark, pages, out_dir, **kw)
+    )
+    if resume_gaps:
+        assert res.buckets_skipped == 4 and res.buckets_done == 4
+    assert res.waves_run == waves and len(tasks) == waves
+    assert all(0 < t <= cores for t in tasks), tasks
+    in_wave = num_buckets // waves - (4 if resume_gaps else 0)
+    fpb = files_per_bucket or max(1, cores // in_wave)
+    for d in os.listdir(out_dir):
+        if d.startswith("part_id="):
+            files = [f for f in os.listdir(os.path.join(out_dir, d))
+                     if f.endswith(".parquet")]
+            assert 0 < len(files) <= fpb, (d, files)
+    m = spark.read.parquet(manifest_path)
+    assert m.agg(F.sum("docs")).first()[0] == GEN_DOCS
+    assert m.select("part_id").distinct().count() == num_buckets
+    assert spark.read.parquet(out_dir).count() == GEN_DOCS
 
 
 def test_pipeline_output_partitioned_by_bucket(spark, tmp_path):
@@ -1484,13 +1575,10 @@ def test_warc_ingestion_end_to_end(spark, tmp_path):
     """WARC files -> pages DataFrame -> extraction pipeline."""
     from readability_php_spark.sources.warc import read_warc_directory, write_warc
 
-    import os as _os
-    TP = "/root/reference/test/test-pages"
-    cases = ["001", "002", "rtl-1", "base-url"]
-    pages = []
-    for i, case in enumerate(cases):
-        with open(_os.path.join(TP, case, "source.html"), "rb") as f:
-            pages.append((f"http://fakehost/{case}/", f"2024-01-01T00:00:0{i}Z", f.read()))
+    pages = [
+        (r.url, f"2024-01-01T00:00:0{i}Z", bytes(r.html))
+        for i, r in enumerate(generated_pages_df(spark, n=4).collect())
+    ]
     wdir = tmp_path / "warcs"
     wdir.mkdir()
     write_warc(str(wdir / "a.warc"), pages[:2], compress=False)
@@ -1506,7 +1594,7 @@ def test_warc_ingestion_end_to_end(spark, tmp_path):
     assert len(out) == 4
     assert all(r.error is None for r in out)
     by_url = {r.url: r for r in out}
-    assert by_url["http://fakehost/001/"].title is not None
+    assert by_url[pages[0][0]].title is not None
 
 
 def test_connected_components_transitive(spark):
@@ -2010,6 +2098,7 @@ def test_video_frame_sampling(spark):
         assert sorted(idxs) == list(range(len(idxs)))
 
 
+@pytest.mark.requires_reference
 def test_fixture_corpus_spark_side_replication_identical(spark):
     """fixture_corpus_df replicates SPARK-side (89 base pages × range join
     — flat in driver memory; the old materialize-all path OOM'd a 24 GB
@@ -2308,6 +2397,28 @@ def test_audio_fingerprint_invariances():
         audio_fingerprint(_tone_wav([100], n=6000, sr=500))
     # just above the floor still fingerprints (no over-eager guard)
     assert isinstance(audio_fingerprint(_tone_wav([300], n=8000, sr=700)), int)
+
+
+def test_audio_fingerprint_low_rate_raises_before_fft(monkeypatch):
+    """A clip recorded at 400 Hz (nyquist under the 300 Hz band floor)
+    raises the sample-rate ValueError, and does so before the windowed
+    FFT runs: the check needs only the rate."""
+    import numpy as np
+
+    from readability_php_spark.operators.audio_dedup import audio_fingerprint
+
+    clip = _tone_wav([100], n=6000, sr=400)
+
+    def no_fft(*_a, **_k):
+        raise AssertionError("FFT ran for a clip the rate check refuses")
+
+    monkeypatch.setattr(np.fft, "rfft", no_fft)
+    with pytest.raises(
+        ValueError,
+        match=r"^sample rate 400 Hz too low: the 300-3000 Hz band ladder "
+        r"needs a usable nyquist above its floor$",
+    ):
+        audio_fingerprint(clip)
 
 
 def test_video_zero_frames_error_row(spark):
@@ -3797,14 +3908,14 @@ def test_c4_quality_rules(spark):
 
 
 def test_training_prep_quality_rule_stages(spark, tmp_path):
-    """c4_rules / gopher_rules wired into the prep pipeline: real fixture
-    articles (English prose) mostly survive both rule sets; the synthetic
+    """c4_rules / gopher_rules wired into the prep pipeline: generated
+    articles (stop-word prose) mostly survive both rule sets; the synthetic
     random-vocabulary corpus fails Gopher's required-stop-word rule and
     C4's terminal-punctuation rule, emptying the output — evidence the
     stages actually gate."""
     from readability_php_spark.plans.training_pipeline import run_training_prep
 
-    articles = fixture_corpus_df(spark, replicas=1).select("url", "html")
+    articles = generated_pages_df(spark).select("url", "html")
     base = run_training_prep(
         spark, articles, str(tmp_path / "base"), min_tokens=10,
         pack_budget=500, fuzzy=False,
@@ -3832,7 +3943,7 @@ def test_training_prep_shuffle_seed(spark, tmp_path):
     assignment, and bit-identical across reruns with the same seed."""
     from readability_php_spark.plans.training_pipeline import run_training_prep
 
-    articles = fixture_corpus_df(spark, replicas=1).select("url", "html")
+    articles = generated_pages_df(spark).select("url", "html")
 
     def run(path, seed):
         run_training_prep(
