@@ -1654,23 +1654,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     replayed verbatim inside training_prep_fuzzy's oracle) to seat the
     snapshot_time_travel and quality_rules gates; exact_dup_groups
     retired (its md5-fingerprint grouping law is stage 1 of
-    training_prep_fuzzy's oracle, and exact_duplicates has direct pytest
-    coverage) to seat dsir_importance; lang_stats folded into
-    rollup_stats (same count/mean/max/continuous-median aggregates at
-    the rollup's lang level) to seat substring_dedup; chunk_documents
+    training_prep_fuzzy's oracle; the exact_duplicates operator itself
+    was later deleted, unreached) to seat dsir_importance; lang_stats
+    folded into rollup_stats (same count/mean/max/continuous-median
+    aggregates at the rollup's lang level) to seat substring_dedup; chunk_documents
     folded into chunk_pack (the pack gate's oracle already chained the
     chunk CTE — chunk_md5 now rides through it, so window contents stay
     pinned) to seat semdedup; hash_split retired (its md5-prefix →
     uint32 threshold law is replayed verbatim in the stratified_sample
     and lang_temperature_sample oracles, plus direct pytest) to seat
-    bpe_tokenize.  Round-6: simhash_candidates retired to a full pytest
-    differential (pure-Python md5-simhash + pigeonhole replay,
-    pair-exact on the same synthetic-dup corpus —
-    tests/test_spark_ops.py::test_simhash_candidates_differential) to
-    seat incremental_dedup — the wave-incremental chain dedup_job runs
-    (intra-wave exact → Bloom-pruned corpus verify → incremental fuzzy
-    with the corpus-wins keeper), previously the only operator family
-    without an oracle row.  Newest / riskiest gates lead."""
+    bpe_tokenize.  Round-6: simhash_candidates retired to a pytest
+    differential (the simhash operators and that differential were later
+    deleted, unreached) to seat incremental_dedup — the wave-incremental
+    chain dedup_job runs (intra-wave exact → Bloom-pruned corpus verify
+    → incremental fuzzy with the corpus-wins keeper), previously the only
+    operator family without an oracle row.  Newest / riskiest gates lead."""
     return {
         "incremental_dedup": q_incremental_dedup,
         "extract_roundtrip": q_extract_roundtrip,

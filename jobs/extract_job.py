@@ -34,9 +34,6 @@ def main() -> None:
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--no-snapshots", action="store_true",
                     help="skip the per-wave file-manifest snapshot commit")
-    ap.add_argument("--spread-skew", action="store_true",
-                    help="input-side skew leveler for hostile layouts "
-                         "(costs one shuffle of the raw HTML)")
     ap.add_argument("--char-threshold", type=int, default=500)
     ap.add_argument("--master", default=None, help="local testing only; omit under spark-submit")
     args = ap.parse_args()
@@ -69,7 +66,6 @@ def main() -> None:
         lang_filter=args.lang,
         max_html_bytes=args.max_html_bytes,
         snapshots=not args.no_snapshots,
-        spread_skew=args.spread_skew,
     )
     print(
         f"done: buckets={result.buckets_done} skipped={result.buckets_skipped} "

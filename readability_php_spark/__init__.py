@@ -10,7 +10,7 @@ Re-expresses the capabilities of andreskrey/readability.php (reference at
   tree + canonical serializer built on the stdlib (no lxml in this environment).
 - ``readability_php_spark.operators`` — Spark DataFrame operators: the
   vectorized ``mapInPandas`` extraction operator, dedup (exact / MinHash-LSH /
-  SimHash / n-gram Jaccard), similarity search, and text-analysis functions.
+  n-gram Jaccard), similarity search, and text-analysis functions.
 - ``readability_php_spark.plans``    — end-to-end jobs: scan → skew-salted
   repartition → size-bucketed Arrow batches → extract → write, with
   per-partition lineage/metrics and checkpoint-manifest resume.

@@ -86,13 +86,3 @@ class Configuration:
 
     def with_overrides(self, **kwargs: Any) -> "Configuration":
         return replace(self, **kwargs)
-
-
-#: Options the reference's own test harness applies to every fixture
-#: (test/ReadabilityTest.php:25-29).
-FIXTURE_HARNESS_CONFIG = Configuration(
-    original_url="http://fakehost/test/test.html",
-    fix_relative_urls=True,
-    substitute_entities=True,
-    article_byline=True,
-)

@@ -3,7 +3,7 @@ caches from costing every task.
 
 On a real cluster the job runs ``spark-submit --py-files rps.zip`` (north
 rule); for library/driver-API use this helper builds the equivalent zip once
-per process and registers it with ``SparkContext.addPyFile`` so Python
+per source state and registers it with ``SparkContext.addPyFile`` so Python
 workers can unpickle the extraction UDF regardless of the driver's cwd or
 sys.path.
 
@@ -26,6 +26,7 @@ archive."""
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
 import sys
 import tempfile
@@ -36,28 +37,43 @@ _SHIPPED_ATTR = "_readability_php_spark_shipped"
 
 
 def package_zip_path() -> str:
+    """Path of a zip of the package's ``.py`` files, built once per source
+    state: the name carries a sha256 over every shipped path and its bytes,
+    so an edited checkout never reuses a zip of older code.  Each build
+    writes its own temp file in the same directory and renames it into
+    place, so concurrent builders never share a half-written file."""
     import readability_php_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(readability_php_spark.__file__))
+    sources = []  # (path in the zip, bytes)
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as f:
+                    sources.append((
+                        os.path.join("readability_php_spark", os.path.relpath(full, pkg_dir)),
+                        f.read(),
+                    ))
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        # a NUL never occurs in a path, and each file digest is 32 bytes
+        digest.update(rel.encode() + b"\0" + hashlib.sha256(data).digest())
+    out_dir = tempfile.gettempdir()
     zip_path = os.path.join(
-        tempfile.gettempdir(),
-        f"readability_php_spark-{readability_php_spark.__version__}-py.zip",
+        out_dir, f"readability_php_spark-{digest.hexdigest()[:16]}-py.zip"
     )
     if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "readability_php_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-        os.replace(tmp, zip_path)
+        fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=out_dir)
+        try:
+            with os.fdopen(fd, "wb") as raw, zipfile.ZipFile(raw, "w", zipfile.ZIP_DEFLATED) as zf:
+                for rel, data in sources:
+                    zf.writestr(rel, data)
+            os.replace(tmp, zip_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     return zip_path
 
 

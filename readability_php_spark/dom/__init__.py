@@ -9,5 +9,5 @@ from .node import (  # noqa: F401
     Node,
     Text,
 )
-from .parser import parse_html, parse_html_bytes  # noqa: F401
+from .parser import parse_html  # noqa: F401
 from .serializer import serialize  # noqa: F401

@@ -634,7 +634,3 @@ def parse_html(html: str) -> Document:
         # tokenizer blow-ups on pathological input: return what we built
         pass
     return tb.doc
-
-
-def parse_html_bytes(raw: bytes, encoding: str = "utf-8") -> Document:
-    return parse_html(raw.decode(encoding, errors="replace"))

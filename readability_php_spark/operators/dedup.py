@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash-LSH, SimHash.
+"""Deduplication operators: exact, n-gram Jaccard, MinHash-LSH.
 
 Scale shapes (the part that matters at 100 TB):
 
@@ -9,10 +9,6 @@ Scale shapes (the part that matters at 100 TB):
   self-join*: explode k bands → shuffle on (band, band_hash) → pairs only
   within buckets.  The full O(n²) similarity join never happens; the only
   quadratic work is within-bucket, which LSH keeps tiny.
-- **SimHash**: 64-bit signature via per-token xxhash64 bit votes
-  (aggregate over a 64-slot vector, all lambda column ops); near-dups are
-  pairs within hamming radius via 4×16-bit block index (pigeonhole: any
-  pair within hamming distance 3 shares at least one exact 16-bit block).
 - **n-gram Jaccard**: exact verifier for candidate pairs (used after LSH
   bucketing, or standalone on a bounded pair set).
 
@@ -33,22 +29,6 @@ from .text_analysis import fingerprint
 
 
 # --- exact ------------------------------------------------------------------
-
-def exact_duplicates(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical (normalized) documents: one row per
-    duplicated fingerprint with the keeper (min doc_id) and group size."""
-    return (
-        documents.select("doc_id", fingerprint(F.col(text_col)).alias("fp"))
-        # null text is "uncomparable", not "identical to other nulls"
-        .filter(F.col("fp").isNotNull())
-        .groupBy("fp")
-        .agg(
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.count("*").alias("group_size"),
-        )
-        .filter(F.col("group_size") > 1)
-    )
-
 
 def exact_dedup(
     documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -201,7 +181,7 @@ def connected_components(
     """(doc_id, cluster_id) from candidate near-dup pairs: cluster_id is the
     minimum doc_id reachable through the pair graph — the keeper under
     keep-lowest-id dedup.  Turning pairwise matches into clusters is the
-    step after LSH/simhash candidate generation in every dedup pipeline
+    step after LSH candidate generation in every dedup pipeline
     (A ~ B ~ C must collapse to ONE representative even when (A, C) never
     collided).
 
@@ -493,89 +473,6 @@ def fuzzy_dedup(
         F.col("doc_id").alias(id_col)
     )
     return documents.join(losers, id_col, "left_anti")
-
-
-# --- SimHash --------------------------------------------------------------------
-
-def simhash64(text_col: str, hash_fn: str = "xxhash64") -> Column:
-    """64-bit SimHash as bigint over the named text column.  Per distinct
-    token, a 64-bit hash supplies the bit pattern; each bit votes ±1; sign
-    of the sum sets the bit.  All column algebra (aggregate over a 64-slot
-    vote array) — no UDF.  Written as a SQL expression because
-    shiftleft/shiftright need column-valued shift amounts there (the
-    DataFrame API only accepts Python ints).
-
-    hash_fn="xxhash64" (default): one JVM intrinsic per token — the 100 TB
-    path.  hash_fn="md5": bit i comes from hex digit i//4 of md5(token)
-    (shift i%4) — byte-identical in any engine with md5/substr/instr, which
-    makes the operator oracle-checkable against DuckDB."""
-    if hash_fn == "xxhash64":
-        bits = """
-              transform(sequence(0, 63),
-                        i -> if((shiftright(xxhash64(tok), cast(i as int)) & 1L) = 1L, 1L, -1L))"""
-    elif hash_fn == "md5":
-        bits = """
-              flatten(transform(sequence(0, 15),
-                d -> transform(sequence(0, 3),
-                  s -> if((shiftright(instr('0123456789abcdef', substr(md5(tok), d + 1, 1)) - 1, s) & 1) = 1, 1L, -1L))))"""
-    else:
-        raise ValueError(f"unknown simhash hash_fn: {hash_fn!r}")
-    sql = f"""
-      aggregate(
-        zip_with(
-          aggregate(
-            array_distinct(split(lower(trim({text_col})), '\\\\s+')),
-            array_repeat(0L, 64),
-            (acc, tok) -> zip_with(
-              acc,{bits},
-              (x, y) -> x + y)),
-          sequence(0, 63),
-          (v, i) -> if(v > 0L, shiftleft(1L, cast(i as int)), 0L)),
-        0L, (acc, x) -> acc | x)
-    """
-    return F.expr(sql)
-
-
-def simhash_near_dup_candidates(
-    documents: DataFrame, text_col: str = "text", hash_fn: str = "xxhash64"
-) -> DataFrame:
-    """Pairs sharing ≥1 exact 16-bit block of the simhash (pigeonhole for
-    hamming distance ≤ 3); shuffle key is (block_idx, block_value)."""
-    sh = documents.select("doc_id", simhash64(text_col, hash_fn).alias("sh"))
-    blocks = sh.select(
-        "doc_id",
-        "sh",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 3), "
-                "i -> struct(i as block, shiftright(sh, cast(i * 16 as int)) & 65535L as val))"
-            )
-        ).alias("b"),
-    ).select("doc_id", "sh", F.col("b.block").alias("block"), F.col("b.val").alias("val"))
-    # Bucket-local pair generation: one simhash pass, one shuffle on
-    # (block, val); sort_array on array<struct> orders by doc_id (first
-    # field), so x before y ⇒ doc_a < doc_b.  (Same rationale + skew note
-    # as minhash_lsh_candidates.)
-    buckets = blocks.groupBy("block", "val").agg(
-        F.sort_array(F.collect_set(F.struct("doc_id", "sh"))).alias("ids")
-    )
-    pairs = (
-        buckets.filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-                    "x.sh AS sh_a, y.sh AS sh_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b", "p.sh_a", "p.sh_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return pairs.select("doc_a", "doc_b", hamming.alias("hamming"))
 
 
 # --- line-level corpus dedup (C4/CCNet-style) --------------------------------

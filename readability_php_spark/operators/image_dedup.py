@@ -1,6 +1,6 @@
 """Perceptual-hash (pHash) image deduplication.
 
-The missing multimodal-dedup story: text gets MinHash/SimHash near-dup
+The missing multimodal-dedup story: text gets MinHash-LSH near-dup
 detection (``operators/dedup.py``); images get the classic DCT perceptual
 hash — re-encodes, recompressions, and format conversions of the same
 picture collapse to (near-)identical 64-bit hashes even though their
@@ -24,11 +24,11 @@ Scale shape mirrors the text-side dedup chain end-to-end:
 - hashing is ONE Arrow-batched ``mapInPandas`` pass over the media table
   (decode + two 32×32 matmuls per image — microseconds next to the
   decode); no shuffle;
-- candidate generation is the SimHash pigeonhole trick
-  (``dedup.simhash_near_dup_candidates``): split the hash into ``blocks``
-  equal bit-blocks, shuffle once on (block, value) — any pair within
-  Hamming distance ``blocks − 1`` shares at least one exact block.  No
-  all-pairs product anywhere;
+- candidate generation is the pigeonhole block index (Manku et al.,
+  "Detecting Near-Duplicates for Web Crawling", WWW 2007): split the
+  hash into ``blocks`` equal bit-blocks, shuffle once on (block, value)
+  — any pair within Hamming distance ``blocks − 1`` shares at least one
+  exact block.  No all-pairs product anywhere;
 - clustering reuses ``dedup.connected_components`` (O(log diameter)
   rounds, pointer jumping).
 
@@ -205,64 +205,6 @@ def _blocked(ph: DataFrame, blocks: int) -> DataFrame:
     )
 
 
-def _salted_wave_corpus_pairs(
-    wb: DataFrame, cb: DataFrame, bucket_cap: "int | None"
-) -> DataFrame:
-    """(block, val)-keyed equi-join of wave-blocked × corpus-blocked rows
-    → candidate pairs (id_a=wave, id_b=corpus, ph_a, ph_b), with the
-    cross-relation twin of :func:`split_overcap_buckets`'s mega-bucket
-    guard: a degenerate hash bucket (flat images / steady audio) present
-    in BOTH the maintained corpus table and the wave would put
-    O(corpus_bucket × wave_bucket) pair work on one shuffle key.  When
-    the largest CORPUS bucket exceeds ``bucket_cap``, exactly those
-    over-cap keys take a replicated×salted join — the (small) wave side
-    replicates ``s = ceil(biggest / cap)`` ways, the corpus side salts by
-    id-hash — so each (block, val, salt) key carries ~1/s of the hot
-    bucket's pairs.  Every (wave, corpus) pair still meets exactly once
-    (the wave replica index equals the corpus row's salt exactly once),
-    so the emitted pair set is IDENTICAL to the unsalted join; sizing
-    costs one bounded aggregate (one row per corpus bucket feeding a
-    scalar max) in the common no-skew case."""
-    base_cond = (F.col("w.block") == F.col("c.block")) & (
-        F.col("w.val") == F.col("c.val")
-    )
-    pair_cols = [
-        F.col("w.media_id").alias("id_a"),
-        F.col("c.media_id").alias("id_b"),
-        F.col("w.phash").alias("ph_a"),
-        F.col("c.phash").alias("ph_b"),
-    ]
-    if bucket_cap is not None:
-        counts = cb.groupBy("block", "val").count()
-        biggest = counts.agg(F.max("count")).first()[0] or 0
-        if int(biggest) > bucket_cap:
-            s = -(-int(biggest) // bucket_cap)  # ceil div
-            over_keys = F.broadcast(
-                counts.filter(F.col("count") > bucket_cap).drop("count")
-            )
-            cb_under = cb.join(over_keys, ["block", "val"], "left_anti")
-            cb_over = cb.join(over_keys, ["block", "val"], "left_semi").withColumn(
-                "salt",
-                F.pmod(F.xxhash64(F.col("media_id")), F.lit(s)).cast("int"),
-            )
-            wb_over = wb.join(over_keys, ["block", "val"], "left_semi").withColumn(
-                "rep", F.explode(F.array(*[F.lit(i) for i in range(s)]))
-            )
-            under = wb.alias("w").join(cb_under.alias("c"), base_cond).select(
-                *pair_cols
-            )
-            over = (
-                wb_over.alias("w")
-                .join(
-                    cb_over.alias("c"),
-                    base_cond & (F.col("w.rep") == F.col("c.salt")),
-                )
-                .select(*pair_cols)
-            )
-            return under.unionByName(over)
-    return wb.alias("w").join(cb.alias("c"), base_cond).select(*pair_cols)
-
-
 def phash_near_dup_candidates(
     hashes: DataFrame,
     *,
@@ -361,116 +303,3 @@ def phash_image_dedup(
         keeper.alias("keeper"),
         (keeper == F.col("media_id")).alias("is_keeper"),
     )
-
-
-def incremental_hash_dedup(
-    wave_hashes: DataFrame,
-    corpus_hashes: "DataFrame | None",
-    *,
-    max_hamming: int = 3,
-    blocks: int = 4,
-    id_col: str = "media_id",
-    hash_col: str = "phash",
-    bucket_cap: "int | None" = 100_000,
-) -> "tuple[DataFrame, DataFrame]":
-    """Dedup a NEW wave of 64-bit perceptual hashes against an
-    already-ingested corpus without re-pairing the corpus — the per-wave
-    shape of media dedup a rolling ingestion actually runs, and the
-    media twin of ``dedup.incremental_fuzzy_dedup`` (same corpus-wins
-    contract).  Works on ANY 64-bit Hamming signature: image DCT-pHash
-    (``compute_phash``) and audio fingerprints
-    (``compute_audio_fingerprint``, pass ``hash_col='afp'``) alike.
-
-    Returns ``(verdicts, append_hashes)``:
-
-    - ``verdicts`` — one row per wave row: ``(id_col, hash_col, keeper,
-      is_keeper)``.  Clusters form over intra-wave AND wave↔corpus
-      verified pairs jointly (one connected-components pass), so a wave
-      item linked to the corpus only THROUGH a discarded wave sibling
-      still dies.  Cluster rule: any cluster containing a corpus item
-      keeps NO wave items (existing media always win — they are ingested
-      and immutable; ``keeper`` is the min corpus id); a wave-only
-      cluster keeps its min id.
-    - ``append_hashes`` — the kept wave ``(id_col, hash_col)`` rows for
-      the caller to APPEND to its maintained hash table.
-
-    ``corpus_hashes`` is that maintained table (``id_col``, ``hash_col``;
-    one 8-byte signature per item — unlike LSH bands there is no
-    bootstrap asymmetry, the table is just the hashes of everything
-    kept so far).  Pass ``None`` on the very first wave.  Ids must be
-    unique across wave ∪ corpus.
-
-    Scale shape: the corpus is never paired against itself — its cost
-    per wave is one projection + pigeonhole explode feeding a
-    (block, val)-keyed equi-join against the (small) wave side, so pair
-    work is O(wave² within buckets + wave↔corpus matches), not
-    O(corpus²) and not O(corpus × wave).  Intra-wave pairs go through
-    :func:`phash_near_dup_candidates` (over-cap salting included)."""
-    wave = (
-        wave_hashes.select(
-            F.col(id_col).alias("media_id"), F.col(hash_col).alias("phash")
-        )
-        .filter(F.col("phash").isNotNull())
-        .localCheckpoint()  # feeds candidates, the wc join, and verdicts
-    )
-    ww = phash_near_dup_candidates(
-        wave, max_hamming=max_hamming, blocks=blocks, bucket_cap=bucket_cap
-    ).select("id_a", "id_b")
-    edges = ww
-    wc_corpus_ids = None
-    if corpus_hashes is not None:
-        corp = corpus_hashes.select(
-            F.col(id_col).alias("media_id"), F.col(hash_col).alias("phash")
-        ).filter(F.col("phash").isNotNull())
-        wb = _blocked(wave, blocks)
-        cb = _blocked(corp, blocks)
-        # over-cap corpus buckets take the replicated×salted join (same
-        # mega-bucket guard as the intra-wave path — bucket_cap now
-        # applies to BOTH pair generators; pair set identical either way)
-        wc = (
-            _salted_wave_corpus_pairs(wb, cb, bucket_cap)
-            .filter(
-                F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-                <= max_hamming
-            )
-            .select("id_a", "id_b")
-            .distinct()  # a pair can meet in several blocks
-        )
-        edges = ww.unionByName(wc)
-        wc_corpus_ids = wc.select(F.col("id_b").alias("media_id")).distinct()
-    labels = connected_components(edges, src="id_a", dst="id_b")
-    # corpus-wins: the min corpus id per cluster, where a corpus member
-    # exists (corpus ids only enter labels through wc edges)
-    if wc_corpus_ids is not None:
-        corpus_keepers = (
-            labels.join(
-                wc_corpus_ids.withColumnRenamed("media_id", "doc_id"), "doc_id"
-            )
-            .groupBy("cluster_id")
-            .agg(F.min("doc_id").alias("corpus_keeper"))
-        )
-    else:
-        corpus_keepers = None
-    wave_labeled = wave.join(
-        labels.withColumnRenamed("doc_id", "media_id"), "media_id", "left"
-    )
-    # min WAVE id per cluster (the wave-only-cluster keeper)
-    wave_mins = (
-        wave_labeled.filter(F.col("cluster_id").isNotNull())
-        .groupBy("cluster_id")
-        .agg(F.min("media_id").alias("wave_min"))
-    )
-    out = wave_labeled.join(wave_mins, "cluster_id", "left")
-    if corpus_keepers is not None:
-        out = out.join(corpus_keepers, "cluster_id", "left")
-    else:
-        out = out.withColumn("corpus_keeper", F.lit(None).cast("long"))
-    keeper = F.coalesce("corpus_keeper", "wave_min", "media_id")
-    verdicts = out.select(
-        F.col("media_id").alias(id_col),
-        F.col("phash").alias(hash_col),
-        keeper.alias("keeper"),
-        (keeper == F.col("media_id")).alias("is_keeper"),
-    )
-    append_hashes = verdicts.filter("is_keeper").select(id_col, hash_col)
-    return verdicts, append_hashes

@@ -8,14 +8,11 @@ the dominant web image formats — decode for REAL via stdlib-only decoders
 Huffman entropy decode — baseline AND progressive/SOF2 scan
 accumulation — dequant, IDCT, chroma upsample).  Image RESIZE is real
 too (``resize_image``: decode → numpy half-pixel-center bilinear →
-PNG re-encode), as is video frame extraction for RIFF/AVI containers
-(``sample_frames``: chunk-tree walk pulling the ``##dc``/``##db``
-stream-0 frames — MJPEG payloads then decode through the in-repo JPEG
-codec).  Only non-AVI video containers (MP4/WebM need a full ISO-BMFF/
-Matroska + codec stack) still raise ``NotImplementedError`` unless a
-deterministic fake is requested; swapping those for ffmpeg is a
-one-function change and everything around them (batching, schema,
-metadata propagation) is production-shaped.
+PNG re-encode).  Video is header-only: ``avi_video_metadata``,
+``mp4_video_metadata`` and ``webm_video_metadata`` walk the RIFF,
+ISO-BMFF and EBML chunk trees for width, height and duration; frame and
+pixel decode need a full codec stack (ffmpeg), so a parsed video row
+carries ``pixels_unavailable``.
 
 Pattern (north rule §multimodal): binary payload column + typed metadata
 struct; heavy per-item work in Arrow-batched ``mapInPandas`` with
@@ -562,52 +559,17 @@ def resize_image(
 
 
 # --- video containers ---------------------------------------------------------
-# RIFF/AVI is the one video container a from-scratch stdlib parser can
-# honestly support (public spec, chunk-tree structure, MJPEG frames are
-# plain JPEG streams our codec decodes).  MP4/WebM need a full
-# ISO-BMFF/Matroska + inter-frame codec stack — those stay ffmpeg-gated.
-
-
-def _avi_video_frames(payload: bytes) -> list[bytes]:
-    """All stream-0 video frame payloads (``00dc`` compressed / ``00db``
-    uncompressed chunks) of a RIFF/AVI byte string, in container order —
-    an iterative chunk-tree walk (word alignment per the RIFF spec).  A
-    LIST chunk ('movi', and the 'rec ' groups VfW-style interleaved
-    muxers wrap frames in) is descended into IMMEDIATELY, with the
-    continuation after it pushed for later — document order, exactly as a
-    recursive walk would visit, without recursion depth limits."""
-    frames: list[bytes] = []
-    # continuations: (resume_pos, end) of suspended outer chunk sequences
-    stack: list = []
-    pos = 12
-    end = min(len(payload), 8 + struct.unpack("<I", payload[4:8])[0])
-    while True:
-        while pos + 8 <= end:
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            body = pos + 8
-            nxt = body + size + (size & 1)  # chunks are word-aligned
-            if cid == b"LIST" and size >= 4:
-                # descend now (list body after its 4-byte type), resume after
-                stack.append((nxt, end))
-                pos, end = body + 4, min(body + size, end)
-                continue
-            if cid in (b"00dc", b"00db") and size > 0:
-                frames.append(payload[body : body + size])
-            pos = nxt
-        if not stack:
-            return frames
-        pos, end = stack.pop()
+# Header-only metadata walks for AVI, MP4 and WebM; frame decode needs an
+# inter-frame codec stack and stays ffmpeg-gated.
 
 
 def encode_avi_mjpeg(
     width: int, height: int, frames: "list[bytes]", fps: int = 25
 ) -> bytes:
     """Minimal spec-valid MJPEG AVI writer — the fixture-builder twin of
-    :func:`_avi_video_frames` (the role ``encode_png`` / ``pcm16_wav_bytes``
+    :func:`avi_video_metadata` (the role ``encode_png`` / ``pcm16_wav_bytes``
     play for images/audio): tests synthesize REAL video containers whose
-    frames are in-repo ``encode_jpeg`` streams, and prove the sampler
-    recovers the exact frame bytes."""
+    frames are in-repo ``encode_jpeg`` streams."""
 
     def chunk(cid: bytes, data: bytes) -> bytes:
         return cid + struct.pack("<I", len(data)) + data + (b"\x00" if len(data) & 1 else b"")
@@ -675,12 +637,6 @@ def avi_video_metadata(payload: bytes) -> "tuple[int, int, float | None]":
         if not stack:
             raise ValueError("AVI missing avih header")
         pos, end = stack.pop()
-
-
-def avi_dimensions(payload: bytes) -> tuple[int, int]:
-    """(width, height) of an AVI — see :func:`avi_video_metadata`."""
-    w, h, _ = avi_video_metadata(payload)
-    return w, h
 
 
 #: ISO-BMFF container boxes worth descending into for moov metadata
@@ -877,82 +833,6 @@ def encode_mp4_stub(
     )
 
 
-def sample_frames(payload: bytes, every_n: int = 10, *, fake: bool = False) -> list[bytes]:
-    """Every n-th video frame of a RIFF/AVI payload (REAL — see
-    :func:`_avi_video_frames`; MJPEG frames are JPEG streams the in-repo
-    codec decodes).  Non-AVI containers raise ``NotImplementedError``
-    (ffmpeg-gated); ``fake=True`` keeps the legacy fixed-64-byte
-    pseudo-frame path the plumbing tests use."""
-    if fake:
-        frame_size = 64
-        frames = [payload[i : i + frame_size] for i in range(0, len(payload), frame_size)]
-        return frames[::every_n]
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise NotImplementedError(
-            "non-AVI video frame sampling requires ffmpeg; not available in this environment"
-        )
-    return _avi_video_frames(payload)[::every_n]
-
-
-FRAME_SCHEMA = StructType([
-    StructField("media_id", LongType(), True),
-    StructField("frame_idx", IntegerType(), True),
-    StructField("frame", BinaryType(), True),
-    StructField("error", StringType(), True),
-])
-
-
-def sample_video_frames(
-    media: DataFrame, every_n: int = 10, *, fake: bool = True
-) -> DataFrame:
-    """video rows → one row per sampled frame (explode shape: the Arrow
-    batches carry binary frames, the downstream feature extractor reuses
-    extract_media_features' discipline).  ``fake=False`` runs the REAL
-    RIFF/AVI frame walk — MJPEG frames come back as JPEG byte strings the
-    in-repo codec (and so ``phash_image_dedup``) consumes directly; a row
-    the sampler cannot parse yields ONE null-frame row carrying ``error``
-    (same auditability contract as the image/audio extractors — decode
-    coverage stays measurable downstream)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {f.name: [] for f in FRAME_SCHEMA.fields}
-            for i in range(len(pdf)):
-                if pdf["kind"].iat[i] != "video":
-                    continue
-                raw = pdf["payload"].iat[i]
-                raw = bytes(raw) if raw is not None else b""
-                try:
-                    frames = sample_frames(raw, every_n, fake=fake)
-                except NotImplementedError as e:
-                    out["media_id"].append(pdf["media_id"].iat[i])
-                    out["frame_idx"].append(None)
-                    out["frame"].append(None)
-                    out["error"].append(f"decoder_unavailable: {e}")
-                    continue
-                if not frames:
-                    # a structurally valid container with no sampleable
-                    # video frames (zero-frame AVI, or frames on a stream
-                    # the walker doesn't match) must NOT silently vanish:
-                    # one null-frame row keeps the per-row auditability
-                    # contract (every media row accounted for downstream)
-                    out["media_id"].append(pdf["media_id"].iat[i])
-                    out["frame_idx"].append(None)
-                    out["frame"].append(None)
-                    out["error"].append("no_frames")
-                    continue
-                for idx, frame in enumerate(frames):
-                    out["media_id"].append(pdf["media_id"].iat[i])
-                    out["frame_idx"].append(idx)
-                    out["frame"].append(frame)
-                    out["error"].append(None)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=FRAME_SCHEMA
-    )
-
-
 RESIZE_SCHEMA = StructType([
     StructField("media_id", LongType(), True),
     StructField("payload", BinaryType(), True),     # resized, PNG-encoded
@@ -1035,8 +915,7 @@ def extract_media_features(
                         # header-only dims/duration for the three dominant
                         # web containers (same tier as the progressive-JPEG
                         # dims fallback); pixel/frame decode stays ffmpeg-
-                        # gated for MP4/WebM and lives in sample_video_
-                        # frames for AVI, so EVERY video row carries
+                        # gated, so EVERY video row carries
                         # pixels_unavailable — unknown containers raise and
                         # surface decoder_unavailable like images do, so
                         # `error IS NULL` never reads garbage as cleaner

@@ -262,21 +262,8 @@ def run_extract_job(
     # default: cluster cores / buckets-in-wave (>=1)
     snapshots: bool = True,  # commit a file-manifest snapshot per wave
     # (plans/snapshots.py) so readers can pin an as-of view of the output
-    spread_skew: bool = False,  # opt-in input-side skew spreader, see below
 ) -> ExtractJobResult:
-    """The flagship job.  ``pages``: DataFrame with (url, html[, lang...]).
-
-    ``spread_skew`` — salted repartition + size-sorted batching for
-    corpora whose INPUT LAYOUT clusters pathological pages (e.g. a crawl
-    segment of multi-MB pages landing in one file): a uniform
-    ``xxhash64(url)`` repartition levels per-task byte loads, and a local
-    ``sortWithinPartitions(length(html))`` groups similar-sized pages
-    into the same Arrow batch so batch wall-times are predictable.  OFF
-    by default: it is one extra shuffle of the RAW HTML, which this
-    module's header measures at 15-18 s per 0.5 GB — size-balanced scan
-    splits (``maxPartitionBytes``) already handle well-laid-out input for
-    free.  Turn it on when task-duration skew, not total throughput, is
-    the bottleneck."""
+    """The flagship job.  ``pages``: DataFrame with (url, html[, lang...])."""
     tune_session_for_extraction(spark)
     manifest_path = manifest_path or output_path.rstrip("/") + "_manifest"
     config = config or Configuration(
@@ -290,11 +277,6 @@ def run_extract_job(
         pages = pages.filter(F.length("html") <= max_html_bytes)
 
     work = with_bucket(pages, num_buckets, salt_seed)
-    if spread_skew:
-        work = work.repartition(
-            spark.sparkContext.defaultParallelism * 4,
-            F.xxhash64(F.col("url"), F.lit(salt_seed + 1)),
-        ).sortWithinPartitions(F.length("html"))
 
     done_ids = None
     skipped = 0

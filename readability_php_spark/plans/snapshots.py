@@ -85,11 +85,6 @@ SNAPSHOT_LOG_SUFFIX = "_snapshots"
 #: staging location is invisible to them too.
 COMPACTED_DIR = "_compacted"
 
-_LOG_SCHEMA_DDL = (
-    "snapshot_id long, op string, file string, length long, "
-    "part_id int, committed_at timestamp"
-)
-
 
 def _log_path(output_path: str) -> str:
     return output_path.rstrip("/") + SNAPSHOT_LOG_SUFFIX

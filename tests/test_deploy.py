@@ -49,3 +49,37 @@ def test_drop_archive_dir_finders_keeps_path_entries(tmp_path):
         for key in (archive, pkg_dir, sub_dir):
             sys.path_importer_cache.pop(key, None)
         zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_package_zip_path_follows_source_edits(tmp_path, monkeypatch):
+    """The zip is named by its sources: editing a shipped file yields a new
+    path whose zip holds the edit, and no temp file is left behind."""
+    import shutil
+    import tempfile
+
+    import readability_php_spark
+    from readability_php_spark.deploy import package_zip_path
+
+    src = os.path.dirname(os.path.abspath(readability_php_spark.__file__))
+    pkg = tmp_path / "pkg" / "readability_php_spark"
+    shutil.copytree(src, pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    out = tmp_path / "out"
+    out.mkdir()
+    monkeypatch.setattr(readability_php_spark, "__file__", str(pkg / "__init__.py"))
+    monkeypatch.setattr(tempfile, "tempdir", str(out))
+
+    first = package_zip_path()
+    assert os.path.dirname(first) == str(out)
+    assert package_zip_path() == first
+
+    edited = pkg / "operators" / "urls.py"
+    edited.write_text(edited.read_text() + "\nEDITED_MARKER = 1\n")
+    second = package_zip_path()
+    assert second != first
+    with zipfile.ZipFile(second) as zf:
+        assert b"EDITED_MARKER = 1" in zf.read("readability_php_spark/operators/urls.py")
+    with zipfile.ZipFile(first) as zf:
+        assert b"EDITED_MARKER" not in zf.read("readability_php_spark/operators/urls.py")
+    assert sorted(os.listdir(out)) == sorted(
+        os.path.basename(p) for p in (first, second)
+    )

@@ -19,7 +19,6 @@ from readability_php_spark.config import Configuration  # noqa: E402
 from readability_php_spark.operators.dedup import (  # noqa: E402
     exact_dedup,
     minhash_lsh_candidates,
-    simhash_near_dup_candidates,
 )
 from readability_php_spark.operators.extract import extract_operator  # noqa: E402
 from readability_php_spark.operators.multimodal import (  # noqa: E402
@@ -1177,66 +1176,6 @@ def test_snapshot_diff_change_feed(spark, tmp_path):
     assert diff_snapshots(spark, out_dir, 2, 3).count() == 0
 
 
-def test_spread_skew_levels_hostile_layout(spark, tmp_path):
-    """spread_skew: a corpus whose layout clusters all the huge pages into
-    one scan partition gets leveled by the salted repartition, and rows
-    inside each task arrive size-sorted (homogeneous Arrow batches).
-    Output is identical either way (pure re-layout)."""
-    from readability_php_spark.plans.pipeline import with_bucket
-
-    big = "<html><body>" + "<p>word " * 4000 + "</p></body></html>"
-    small = "<html><body><p>tiny page</p></body></html>"
-    rows = [(f"http://s.test/big/{i}", big.encode()) for i in range(24)] + [
-        (f"http://s.test/small/{i}", small.encode()) for i in range(200)
-    ]
-    # hostile layout: ALL the big pages in partition 0
-    pages = spark.createDataFrame(rows, "url string, html binary").repartition(1)
-    pages = pages.sortWithinPartitions(F.length("html").desc()).coalesce(1)
-
-    spread = (
-        with_bucket(pages, 8)
-        .repartition(8, F.xxhash64(F.col("url"), F.lit(43)))
-        .sortWithinPartitions(F.length("html"))
-    )
-    from pyspark.sql.functions import spark_partition_id
-
-    loads = (
-        spread.select(
-            spark_partition_id().alias("p"), F.length("html").alias("b")
-        )
-        .groupBy("p")
-        .agg(F.sum("b").alias("bytes"))
-        .collect()
-    )
-    per_part = {r.p: r.bytes for r in loads}
-    # every partition carries some bytes and none dominates: the max load
-    # is within 3x of the mean (hostile layout put 99% in one partition)
-    mean = sum(per_part.values()) / len(per_part)
-    assert len(per_part) == 8 and max(per_part.values()) < 3 * mean
-    # size-sorted within partitions: lengths are non-decreasing per task
-    def check(it):
-        prev = -1
-        for r in it:
-            ln = len(r.html)
-            assert ln >= prev
-            prev = ln
-        return iter(())
-
-    list(spread.select("html").rdd.mapPartitions(
-        lambda it: check(it)
-    ).collect())
-    # end-to-end: spread_skew on vs off produce identical extraction rows
-    out_a = str(tmp_path / "sk_a")
-    out_b = str(tmp_path / "sk_b")
-    run_extract_job(spark, pages, out_a, num_buckets=4, config=CFG,
-                    snapshots=False)
-    run_extract_job(spark, pages, out_b, num_buckets=4, config=CFG,
-                    snapshots=False, spread_skew=True)
-    a = sorted((r.url, r.extracted_text) for r in spark.read.parquet(out_a).collect())
-    b = sorted((r.url, r.extracted_text) for r in spark.read.parquet(out_b).collect())
-    assert a == b
-
-
 def test_snapshot_compaction_and_vacuum(spark, tmp_path):
     """Compaction rewrites a bucket's many small files into few large ones
     under a NEW snapshot; pre-compaction snapshots stay readable until
@@ -1305,82 +1244,6 @@ def test_minhash_lsh_finds_identical_docs(spark):
     pairs = {(r.doc_a, r.doc_b) for r in cands.collect()}
     for i in range(30):
         assert (i, i + 1000) in pairs, f"identical pair ({i},{i+1000}) missed"
-
-
-def test_simhash_identical_docs_zero_hamming(spark):
-    docs = load_table(spark, SF, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") < 20
-    )
-    dupes = docs.select((F.col("doc_id") + 1000).alias("doc_id"), "text")
-    cands = simhash_near_dup_candidates(docs.unionByName(dupes))
-    exact = {(r.doc_a, r.doc_b) for r in cands.collect() if r.hamming == 0}
-    for i in range(20):
-        assert (i, i + 1000) in exact
-
-
-def test_simhash_candidates_differential(spark):
-    """Full pure-Python replay of the retired simhash_candidates gate
-    (round 6: retired from the 50-gate registry to seat
-    incremental_dedup): md5-digit simhash (bit i = bit i%4 of hex digit
-    i//4 of md5(token), ±1 votes over DISTINCT lowercased tokens),
-    16-bit pigeonhole blocks, hamming ≤ 3 — pair-exact against the Spark
-    operator on the same synthetic-duplicate corpus construction the
-    gate used."""
-    import hashlib
-    import re as _re
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") < 100
-    )
-    dupes = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_near_dup_candidates(
-            docs.unionByName(dupes), hash_fn="md5"
-        ).filter(F.col("hamming") <= 3).collect()
-    }
-
-    corpus = {r.doc_id: r.text for r in docs.collect()}
-    corpus.update({d + 1_000_000: t for d, t in corpus.items()})
-
-    def sim(text):
-        votes = [0] * 64
-        for tok in set(_re.split(r"\s+", text.strip().lower())):
-            h = hashlib.md5(tok.encode()).hexdigest()
-            for i in range(64):
-                bit = (int(h[i // 4], 16) >> (i % 4)) & 1
-                votes[i] += 1 if bit else -1
-        sh = sum(1 << i for i, v in enumerate(votes) if v > 0)
-        return sh  # bit 63 unset in practice is NOT guaranteed; keep unsigned
-
-    hashes = {d: sim(t) for d, t in corpus.items()}
-    buckets = {}
-    for d, sh in hashes.items():
-        for b in range(4):
-            buckets.setdefault((b, (sh >> (b * 16)) & 0xFFFF), []).append(d)
-    expect = {}
-    for ids in buckets.values():
-        ids = sorted(ids)
-        for i, a in enumerate(ids):
-            for b in ids[i + 1:]:
-                ham = bin(hashes[a] ^ hashes[b]).count("1")
-                if ham <= 3:
-                    expect[(a, b)] = ham
-    assert got == expect
-    # the construction is non-trivial: every planted dup pair surfaces
-    assert all((d, d + 1_000_000) in expect for d in corpus
-               if d < 1_000_000), "planted dups missing"
-
-
-def test_simhash_md5_variant_portable_value(spark):
-    """The md5-digit hash variant must produce the pinned cross-engine value
-    (same number verified against DuckDB and a pure-Python reference) —
-    this is what makes simhash_candidates oracle-checkable."""
-    from readability_php_spark.operators.dedup import simhash64
-
-    df = spark.createDataFrame([("hello world foo bar baz",)], ["text"])
-    got = df.select(simhash64("text", hash_fn="md5").alias("sh")).collect()[0].sh
-    assert got == 5094529723778850775
 
 
 def test_cosine_topk_self_similarity_excluded(spark):
@@ -2081,23 +1944,6 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     assert sorted(map(tuple, approx)) == sorted(map(tuple, approx2))
 
 
-def test_video_frame_sampling(spark):
-    from readability_php_spark.operators.multimodal import sample_video_frames
-
-    docs = load_table(spark, SF, "documents").limit(30)
-    media = synthetic_media_df(spark, docs)
-    frames = sample_video_frames(media, every_n=5).collect()
-    assert len(frames) > 0
-    # only video rows contribute; frame indices are dense from 0
-    vids = {r.media_id for r in frames}
-    assert all(m % 3 == 2 for m in vids)  # synthetic kind()==video ↔ id%3==2
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r.frame_idx)
-    for idxs in by_media.values():
-        assert sorted(idxs) == list(range(len(idxs)))
-
-
 @pytest.mark.requires_reference
 def test_fixture_corpus_spark_side_replication_identical(spark):
     """fixture_corpus_df replicates SPARK-side (89 base pages × range join
@@ -2175,69 +2021,15 @@ def test_resize_image_real_decode_reencode():
     assert (w, h, len(rp)) == (8, 8, 8 * 8 * 3)
 
 
-def test_avi_mjpeg_frame_sampling_real():
-    """RIFF/AVI walk: the writer/parser pair round-trips exact frame
-    bytes (odd sizes exercise word alignment), every_n subsamples in
-    container order, MJPEG frames decode through the in-repo JPEG codec,
-    and non-AVI payloads stay honestly ffmpeg-gated."""
-    from readability_php_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from readability_php_spark.operators.multimodal import (
-        encode_avi_mjpeg,
-        sample_frames,
-    )
-
-    frames = [
-        encode_jpeg(16, 16, bytes([(k * 40 + i) % 256 for i in range(16 * 16 * 3)]))
-        for k in range(6)
-    ]
-    avi = encode_avi_mjpeg(16, 16, frames)
-    assert sample_frames(avi, 2) == frames[::2]
-    w, h, _ = decode_jpeg(sample_frames(avi, 2)[0])
-    assert (w, h) == (16, 16)
-    odd = [b"\xff\xd8" + b"x" * 7, b"\xff\xd8" + b"y" * 8, b"\xff\xd8" + b"z" * 9]
-    assert sample_frames(encode_avi_mjpeg(4, 4, odd), 1) == odd
-    with pytest.raises(NotImplementedError, match="ffmpeg"):
-        sample_frames(b"\x00" * 100, 1)
-
-
-def test_avi_rec_grouped_frames_in_document_order():
-    """VfW-style interleaved AVIs wrap frames in 'rec ' LISTs inside
-    movi; the walk must return DOCUMENT order across nested lists and
-    direct chunks (pre-fix, a LIFO stack emitted rec groups reversed and
-    after any direct siblings)."""
-    import struct
-
-    from readability_php_spark.operators.multimodal import sample_frames
-
-    def chunk(cid, data):
-        return cid + struct.pack("<I", len(data)) + data + (b"\x00" if len(data) & 1 else b"")
-
-    def lst(ltype, data):
-        return chunk(b"LIST", ltype + data)
-
-    f = [bytes([65 + i]) * 10 for i in range(6)]
-    movi = lst(
-        b"movi",
-        lst(b"rec ", chunk(b"00dc", f[0]) + chunk(b"00dc", f[1]))
-        + chunk(b"00dc", f[2])
-        + lst(b"rec ", chunk(b"00dc", f[3]) + chunk(b"00dc", f[4]))
-        + chunk(b"00dc", f[5]),
-    )
-    body = b"AVI " + movi
-    avi = b"RIFF" + struct.pack("<I", len(body)) + body
-    assert sample_frames(avi, 1) == f
-    assert sample_frames(avi, 3) == f[::3]
-
-
 def test_video_header_metadata_mp4_and_avi(spark):
     """Header-only video metadata: the ISO-BMFF box walk recovers tkhd
-    dims + mvhd duration (v0 layout via the stub twin), avi_dimensions
-    reads avih, and extract_media_features surfaces both — MP4 rows carry
-    pixels_unavailable (frame decode stays ffmpeg-gated), AVI rows decode
-    frames for real so no error."""
+    dims + mvhd duration (v0 layout via the stub twin),
+    avi_video_metadata reads avih, and extract_media_features surfaces
+    all three containers — every parsed video row carries
+    pixels_unavailable (frame decode stays ffmpeg-gated)."""
     from readability_php_spark.operators.jpeg import encode_jpeg
     from readability_php_spark.operators.multimodal import (
-        avi_dimensions,
+        avi_video_metadata,
         encode_avi_mjpeg,
         encode_mp4_stub,
         extract_media_features,
@@ -2268,7 +2060,7 @@ def test_video_header_metadata_mp4_and_avi(spark):
     avi = encode_avi_mjpeg(
         16, 16, [encode_jpeg(16, 16, bytes(16 * 16 * 3))]
     )
-    assert avi_dimensions(avi) == (16, 16)
+    assert avi_video_metadata(avi)[:2] == (16, 16)
     media = spark.createDataFrame(
         [
             (1, "video", bytearray(mp4)),
@@ -2281,9 +2073,8 @@ def test_video_header_metadata_mp4_and_avi(spark):
     rows = {r.media_id: r for r in extract_media_features(media).collect()}
     assert (rows[1].width, rows[1].height, rows[1].duration_s) == (1280, 720, 12.5)
     assert rows[1].error == "pixels_unavailable"
-    # AVI: dims + duration (1 frame @ 25 fps); pixels equally absent
-    # from THIS op (frames live in sample_video_frames), so the same
-    # error tier — `error IS NULL` must never prefer garbage over parsed
+    # AVI: dims + duration (1 frame @ 25 fps); pixels equally absent,
+    # so the same error tier — `error IS NULL` must never prefer garbage over parsed
     assert (rows[2].width, rows[2].height) == (16, 16)
     assert rows[2].duration_s == pytest.approx(0.04)
     assert rows[2].error == "pixels_unavailable"
@@ -2295,16 +2086,15 @@ def test_video_header_metadata_mp4_and_avi(spark):
 
 
 def test_video_frames_and_resize_spark_real(spark):
-    """End-to-end Spark composition on REAL payloads: MJPEG AVI rows →
-    sample_video_frames(fake=False) explodes genuine JPEG frames; image
-    rows → resize_images re-encodes every decodable payload to the target
-    PNG shape with the error-column contract for garbage."""
+    """End-to-end Spark composition on REAL payloads: resize_images skips
+    the MJPEG AVI and garbage video rows, and re-encodes every decodable
+    image payload to the target PNG shape with the error-column contract
+    for garbage."""
     from readability_php_spark.operators.multimodal import (
         decode_image,
         encode_avi_mjpeg,
         encode_png,
         resize_images,
-        sample_video_frames,
     )
     from readability_php_spark.operators.jpeg import encode_jpeg
 
@@ -2322,13 +2112,6 @@ def test_video_frames_and_resize_spark_real(spark):
         ],
         "media_id long, kind string, payload binary",
     )
-    got = sample_video_frames(media, every_n=2, fake=False).collect()
-    ok = [r for r in got if r.error is None]
-    bad = [r for r in got if r.error is not None]
-    assert {(r.media_id, r.frame_idx) for r in ok} == {(1, 0), (1, 1)}
-    assert sorted(bytes(r.frame) for r in ok) == sorted(frames[::2])
-    # the unparseable video row surfaces as ONE null-frame error row
-    assert [(r.media_id, r.frame_idx, r.frame) for r in bad] == [(2, None, None)]
     rz = {r.media_id: r for r in resize_images(media, 4, 5).collect()}
     assert set(rz) == {3, 4}
     assert rz[4].error is not None and rz[4].payload is None
@@ -2419,29 +2202,6 @@ def test_audio_fingerprint_low_rate_raises_before_fft(monkeypatch):
         r"needs a usable nyquist above its floor$",
     ):
         audio_fingerprint(clip)
-
-
-def test_video_zero_frames_error_row(spark):
-    """A structurally valid AVI with no sampleable video frames must
-    yield ONE null-frame 'no_frames' row, not silently vanish (the
-    auditability contract: every media row accounted for downstream)."""
-    from readability_php_spark.operators.multimodal import (
-        encode_avi_mjpeg,
-        sample_video_frames,
-    )
-
-    empty_avi = encode_avi_mjpeg(4, 4, [])
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(empty_avi)), (2, "video", bytearray(b""))],
-        "media_id long, kind string, payload binary",
-    )
-    got = {r.media_id: r for r in
-           sample_video_frames(media, every_n=2, fake=False).collect()}
-    assert got[1].error == "no_frames" and got[1].frame is None
-    # fake path: empty payload → zero pseudo-frames → same contract
-    fake = {r.media_id: r for r in
-            sample_video_frames(media, every_n=2, fake=True).collect()}
-    assert fake[2].error == "no_frames" and fake[2].frame_idx is None
 
 
 def test_media_prep_pipeline(spark):
@@ -3638,113 +3398,6 @@ def test_media_job_cli_end_to_end(spark, tmp_path):
     assert out[1].resized and len(bytes(out[1].payload)) < len(img_a)
 
 
-def test_incremental_hash_dedup(spark):
-    """Wave-vs-corpus 64-bit-Hamming dedup: corpus-wins through
-    transitive wave links, wave-only clusters keep min id, and the
-    verdicts match a batch run over corpus ∪ wave with the corpus-wins
-    rule applied — without the incremental path ever pairing the corpus
-    against itself."""
-    from readability_php_spark.operators.dedup import connected_components
-    from readability_php_spark.operators.image_dedup import (
-        incremental_hash_dedup,
-        phash_near_dup_candidates,
-    )
-
-    H = 0x0123456789ABCDEF
-    corpus = spark.createDataFrame(
-        [(1, H), (2, 0x7EDCBA9876543210)], "media_id long, phash long"
-    )
-    wave_rows = [
-        (100, H),             # exact corpus dup
-        (101, H ^ 1),         # near-dup of 100 → corpus cluster via sibling
-        (102, 0x00000000FFFF0000),
-        (103, 0x00000000FFFF0000),  # intra-wave dup of 102
-        (104, 0x5A5A5A5A5A5A5A5A),  # unique
-    ]
-    wave = spark.createDataFrame(wave_rows, "media_id long, phash long")
-    verdicts, append = incremental_hash_dedup(wave, corpus, max_hamming=3)
-    v = {r.media_id: r for r in verdicts.collect()}
-    assert set(v) == {100, 101, 102, 103, 104}
-    assert v[100].keeper == 1 and not v[100].is_keeper
-    assert v[101].keeper == 1 and not v[101].is_keeper  # transitive kill
-    assert v[102].is_keeper and v[103].keeper == 102 and not v[103].is_keeper
-    assert v[104].is_keeper
-    kept = {r.media_id for r in append.collect()}
-    assert kept == {102, 104}
-
-    # differential vs batch over corpus ∪ wave with the corpus-wins rule
-    allh = corpus.unionByName(wave)
-    comps = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(
-            phash_near_dup_candidates(allh, max_hamming=3),
-            src="id_a", dst="id_b",
-        ).collect()
-    }
-    corpus_ids = {1, 2}
-    by_cluster: dict = {}
-    for mid, _ in wave_rows:
-        by_cluster.setdefault(comps.get(mid, mid), []).append(mid)
-    for cl, members in by_cluster.items():
-        cluster_all = [d for d, c in comps.items() if c == cl] or members
-        corp_in = sorted(d for d in cluster_all if d in corpus_ids)
-        want_keeper = corp_in[0] if corp_in else min(members)
-        for m in members:
-            assert v[m].keeper == want_keeper, (m, v[m].keeper, want_keeper)
-
-    # bootstrap wave (no corpus yet): plain within-wave keep-min-id
-    v0 = {
-        r.media_id: r
-        for r in incremental_hash_dedup(wave, None, max_hamming=3)[0].collect()
-    }
-    assert v0[100].is_keeper and v0[101].keeper == 100
-    assert v0[102].is_keeper and v0[103].keeper == 102 and v0[104].is_keeper
-
-
-def test_incremental_hash_dedup_overcap_salted_cross_join(spark):
-    """A degenerate hash bucket present in BOTH the corpus table and the
-    wave (the ADVICE mega-bucket case: flat images / steady audio) must
-    take the replicated×salted wave↔corpus join — and the verdicts must
-    be IDENTICAL to the unsalted join (bucket_cap=None), because the
-    salting only re-keys the shuffle, never the pair set."""
-    from readability_php_spark.operators.image_dedup import (
-        incremental_hash_dedup,
-    )
-
-    # all corpus rows share block0's 16-bit value 0xAAAA → one corpus
-    # bucket of 8 rows; pairwise Hamming across rows is large except the
-    # crafted dups below
-    corpus = spark.createDataFrame(
-        [(i, (i << 16) | 0xAAAA) for i in range(1, 9)],
-        "media_id long, phash long",
-    )
-    wave = spark.createDataFrame(
-        [
-            (100, (3 << 16) | 0xAAAA),        # exact dup of corpus 3
-            (101, ((3 << 16) | 0xAAAA) ^ 1),  # near-dup → corpus via 100
-            (102, (7 << 16) | 0xAAAA ^ 0xFF00),  # hot-blocks hit, verify fail
-            (103, 0x5A5A_5A5A_5A5A_0000 | 0xAAAA),  # bucket hit, verify fail
-        ],
-        "media_id long, phash long",
-    )
-    runs = {}
-    for cap in (None, 2):  # cap=2 < 8 corpus rows in the hot bucket → s=4
-        verdicts, append = incremental_hash_dedup(
-            wave, corpus, max_hamming=3, bucket_cap=cap
-        )
-        runs[cap] = (
-            sorted(map(tuple, verdicts.collect())),
-            sorted(map(tuple, append.collect())),
-        )
-    assert runs[None] == runs[2]
-    v = {t[0]: t for t in runs[2][0]}
-    # corpus rows differ only in block1 (popcount(i^j) ≤ 3 links them
-    # all), so the corpus-side cluster is one component with min id 1 —
-    # the corpus-wins keeper for both crafted wave dups
-    assert v[100][2] == 1 and v[101][2] == 1
-    assert v[103][3] is True  # bucket collision without verify survives
-
-
 def test_incremental_fuzzy_dedup_differential(spark):
     """Differential check against a pure-Python reference: exact 3-gram
     Jaccard over ALL pairs + union-find + the corpus-wins cluster rule.
@@ -4347,22 +4000,6 @@ def test_dsir_scoring_join_is_broadcast(spark):
     plan = dsir_scores(raw, w, buckets=256, hash_fn="md5")._jdf.queryExecution(
     ).executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-
-
-def test_exact_duplicates_group_view(spark):
-    """Direct coverage for exact_duplicates (gate retired round 5: its law
-    is stage 1 of training_prep_fuzzy's oracle)."""
-    from readability_php_spark.operators.dedup import exact_duplicates
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") < 40
-    )
-    dupes = docs.select((F.col("doc_id") + 1000).alias("doc_id"), "text")
-    groups = exact_duplicates(docs.unionByName(dupes)).collect()
-    assert len(groups) == 40
-    for g in groups:
-        assert g.group_size == 2
-        assert g.keeper_doc_id < 40
 
 
 def test_training_prep_dsir_selection(spark, tmp_path):
