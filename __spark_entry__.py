@@ -2540,7 +2540,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents WHERE doc_id < 300),
             base AS (
               SELECT doc_id, t,
-                     list_filter(string_split_regex(trim(t), '\s+'),
+                     list_filter(string_split_regex(trim(t), '\\s+'),
                                  x -> x <> '') AS words,
                      list_filter(string_split(t, chr(10)),
                                  l -> trim(l) <> '') AS lines
@@ -2556,11 +2556,11 @@ def oracle_sql() -> dict[str, str]:
                       + len(string_split(t, '…')) - 1) AS n_sym,
                      CASE WHEN len(lines) > 0 THEN
                        len(list_filter(lines, l -> regexp_matches(trim(l),
-                           '^(•|‣|▪|\*|-)\s')))::DOUBLE / len(lines)
+                           '^(•|‣|▪|\\*|-)\\s')))::DOUBLE / len(lines)
                        ELSE 0.0 END AS bullet_frac,
                      CASE WHEN len(lines) > 0 THEN
                        len(list_filter(lines, l -> regexp_matches(rtrim(l),
-                           '(\.\.\.|…)$')))::DOUBLE / len(lines)
+                           '(\\.\\.\\.|…)$')))::DOUBLE / len(lines)
                        ELSE 0.0 END AS ellipsis_frac,
                      CASE WHEN len(words) > 0 THEN
                        len(list_filter(words, w -> regexp_matches(w,
@@ -2573,7 +2573,7 @@ def oracle_sql() -> dict[str, str]:
                        AS n_stop,
                      list_filter(lines, l ->
                        regexp_matches(rtrim(l), '[.!?"]$')
-                       AND len(list_filter(string_split_regex(trim(l), '\s+'),
+                       AND len(list_filter(string_split_regex(trim(l), '\\s+'),
                                x -> x <> '')) >= 5
                        AND NOT regexp_matches(lower(l), 'javascript'))
                        AS kept_lines
@@ -3064,7 +3064,7 @@ def oracle_sql() -> dict[str, str]:
         "quality_rollup_by_window": f"""
             WITH base AS (
               SELECT doc_id, lang,
-                     length(regexp_replace(text, '[\s ]+', '', 'g')) AS slen,
+                     length(regexp_replace(text, '[\\s ]+', '', 'g')) AS slen,
                      TIMESTAMP '2024-01-01 00:00:00'
                        + to_hours(doc_id % 48) AS ts
               FROM documents)
@@ -3079,7 +3079,7 @@ def oracle_sql() -> dict[str, str]:
             WITH sub AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
             n AS (SELECT count(*) AS n_docs FROM sub),
             words AS (
-              SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
+              SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
               FROM sub),
             wf AS (SELECT doc_id, term FROM words WHERE term <> ''),
             tf AS (SELECT doc_id, term, count(*) AS tf FROM wf GROUP BY doc_id, term),
@@ -3102,12 +3102,12 @@ def oracle_sql() -> dict[str, str]:
         "decontaminate": """
             WITH grams AS (
               SELECT doc_id,
-                     CASE WHEN len(string_split_regex(lower(trim(text)), '\s+')) < 8
+                     CASE WHEN len(string_split_regex(lower(trim(text)), '\\s+')) < 8
                           THEN []::VARCHAR[]
                           ELSE list_distinct(list_transform(
-                            range(1, len(string_split_regex(lower(trim(text)), '\s+')) - 7 + 1),
+                            range(1, len(string_split_regex(lower(trim(text)), '\\s+')) - 7 + 1),
                             i -> array_to_string(list_slice(
-                                   string_split_regex(lower(trim(text)), '\s+'), i, i + 7), ' ')))
+                                   string_split_regex(lower(trim(text)), '\\s+'), i, i + 7), ' ')))
                      END AS gs
               FROM documents),
             bench AS (
@@ -3135,7 +3135,7 @@ def oracle_sql() -> dict[str, str]:
             base AS (
               SELECT doc_id,
                      string_split(text, chr(10)) AS lines,
-                     string_split_regex(lower(trim(text)), '\s+') AS words
+                     string_split_regex(lower(trim(text)), '\\s+') AS words
               FROM seeded),
             bg AS (
               SELECT doc_id, lines, words,
@@ -3195,9 +3195,9 @@ def oracle_sql() -> dict[str, str]:
             scrubbed AS (
               SELECT doc_id,
                      len(regexp_extract_all(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
+                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS n_emails,
                      regexp_replace(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
                        '<EMAIL>', 'g') AS no_email
               FROM seeded)
             SELECT doc_id, n_emails::INT AS n_emails,

@@ -38,9 +38,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import collect_at_most
+
 #: Sennrich's end-of-word marker: appended as one terminal symbol so
 #: merges distinguish word-final from word-internal contexts.
 END_OF_WORD = "</w>"
+
+#: Distinct-word ceiling for the driver-local merge loop of
+#: :func:`bpe_train`: Heaps' law puts a 100 TB corpus at ~10^6-10^7
+#: distinct words, so 10^6 (tens of MB of (word, cnt) rows) admits every
+#: natural-language vocabulary up to that scale and nothing unbounded.
+BPE_LOCAL_MAX_WORDS = 1_000_000
 
 
 def _initial_symbols(
@@ -181,7 +189,6 @@ def bpe_train(
     text_col: str = "text",
     min_pair_count: int = 2,
     end_of_word: str = END_OF_WORD,
-    strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Train ``merges`` BPE merges on the corpus.  Returns
     ``(merge_table, encoded_vocab)``:
@@ -195,15 +202,16 @@ def bpe_train(
     Stops early when the best remaining pair occurs fewer than
     ``min_pair_count`` times (merging hapax pairs memorizes the corpus).
 
-    ``strategy`` picks where the merge LOOP runs; both produce the
+    Input size picks where the merge LOOP runs; both paths produce the
     identical greedy trajectory (differentially tested), and both train
     on the distinct-words relation built by the one corpus-sized shuffle
     of :func:`word_counts`:
 
-    - ``"local"`` (what ``"auto"`` resolves to): collect the
-      Heaps'-bounded (word, cnt) relation to the driver and run the
-      classical incremental-update merge loop in memory — ONE Spark job
-      for the whole training run, driver round-trips CONSTANT in the
+    - local, when there are at most :data:`BPE_LOCAL_MAX_WORDS` distinct
+      words: one limited collect (:func:`collect_at_most`) brings the
+      Heaps'-bounded (word, cnt) relation to the driver and the
+      classical incremental-update merge loop runs in memory — ONE Spark
+      job for the whole training run, driver round-trips CONSTANT in the
       merge count.  This is the industrial shape (HuggingFace
       tokenizers, SentencePiece: distributed/streamed word counting, a
       local learner over the word-count table): at 100 TB the distinct
@@ -211,7 +219,7 @@ def bpe_train(
       driver-side, while a 64k-merge vocabulary under the per-merge
       loop would be ~64k sequential vocabulary-sized Spark jobs —
       days of pure scheduler latency no cluster size can buy down.
-    - ``"perjob"``: the fully-distributed per-merge loop (adjacent-pair
+    - distributed, over the ceiling: the per-merge loop (adjacent-pair
       explode → map-side-combined agg → ONE-row argmax collect → pure
       column-algebra fold, ``localCheckpoint`` per iteration).  One
       Spark job + one 1-row collect PER MERGE — the right envelope only
@@ -222,9 +230,9 @@ def bpe_train(
     — total, so the trajectory is reproducible cross-run and replayable
     relationally (the DuckDB gate unrolls this loop exactly like the
     logreg/pagerank/k-means oracles).  The pair tie-break compares UTF-8
-    BYTES (Python code-point order locally, ``F.encode`` in the perjob
-    argmax): Python code-point order, DuckDB's default binary collation,
-    and UTF-8 byte order all agree, while Spark's native string
+    BYTES (Python code-point order locally, ``F.encode`` in the
+    distributed argmax): Python code-point order, DuckDB's default binary
+    collation, and UTF-8 byte order all agree, while Spark's native string
     comparison is UTF-16 code units — which sorts supplementary-plane
     characters (surrogate range) BELOW U+E000..FFFF and would diverge
     from the oracle on a count-tied astral pair."""
@@ -232,19 +240,13 @@ def bpe_train(
         raise ValueError("merges must be >= 0")
     if min_pair_count < 1:
         raise ValueError("min_pair_count must be >= 1")
-    if strategy not in ("auto", "local", "perjob"):
-        raise ValueError(
-            f"strategy must be 'auto', 'local' or 'perjob', got {strategy!r}"
-        )
     spark = docs.sparkSession
-    if strategy in ("auto", "local"):
+    rows = collect_at_most(word_counts(docs, text_col), BPE_LOCAL_MAX_WORDS)
+    if rows is not None:
         # deterministic collect order not required (counts are sums and
         # the argmax is a global min over the dict), but sort anyway so
         # the encoded_vocab DataFrame's row order is reproducible
-        wc = sorted(
-            (r.word, int(r.cnt))
-            for r in word_counts(docs, text_col).collect()
-        )
+        wc = sorted((r.word, int(r.cnt)) for r in rows)
         merge_rows, seg = _bpe_train_local(
             wc, merges, min_pair_count, end_of_word
         )

@@ -18,13 +18,13 @@ md5 is used wherever the DuckDB oracle must reproduce values; xxhash64
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from . import collect_at_most
 from .text_analysis import fingerprint
 
 
@@ -130,15 +130,13 @@ def ngram_jaccard_pairs(
 
 # --- MinHash + LSH ------------------------------------------------------------
 
-#: Edge-count ceiling for the driver-local union-find strategy of
+#: Edge-count ceiling for the driver-local union-find path of
 #: :func:`connected_components`.  LSH/pHash/audio candidate-pair sets are
 #: tiny next to their corpora (that is the point of candidate generation),
 #: so the post-filter edge relation usually fits in driver memory with
 #: room to spare; past the ceiling the distributed label-propagation loop
-#: runs unchanged.  Env-overridable for cluster deployments.
-DEFAULT_CC_LOCAL_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "500000")
-)
+#: runs unchanged.
+CC_LOCAL_MAX_EDGES = 500_000
 
 
 def _cc_local_labels(edge_rows) -> dict:
@@ -176,7 +174,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iterations: int = 50,
-    local_max_edges: "int | None" = None,
 ) -> DataFrame:
     """(doc_id, cluster_id) from candidate near-dup pairs: cluster_id is the
     minimum doc_id reachable through the pair graph — the keeper under
@@ -185,17 +182,15 @@ def connected_components(
     (A ~ B ~ C must collapse to ONE representative even when (A, C) never
     collided).
 
-    Strategy dispatch (optimization round; the BPE ``local``-merge shape):
-    the edge relation is first counted — when it fits under
-    ``local_max_edges`` (default :data:`DEFAULT_CC_LOCAL_MAX_EDGES`), the
-    edges are collected once and clustered with a driver-side union-find,
-    which replaces the O(log diameter) loop's ~2 Spark jobs per round
-    (shuffle joins + checkpoint + convergence aggregate) with exactly two
-    bounded jobs (count + collect).  Candidate-pair relations are small by
-    construction — that is what LSH/banding is for — so production waves
-    take this path too; a corpus whose verified-pair graph genuinely
-    exceeds the ceiling falls through to the distributed loop unchanged.
-    Both strategies produce the identical (node → component-minimum)
+    Input size picks the path: when the edge relation has at most
+    :data:`CC_LOCAL_MAX_EDGES` rows, one limited collect
+    (:func:`collect_at_most`) fetches it and a driver-side union-find
+    clusters it, in place of the O(log diameter) loop's ~2 Spark jobs
+    per round (shuffle joins + checkpoint + convergence aggregate).
+    Candidate-pair relations are small by construction — that is what
+    LSH/banding is for — so production waves take this path too; a
+    verified-pair graph over the ceiling runs the distributed loop.
+    Both paths produce the identical (node → component-minimum)
     labeling; a differential test pins them together.
 
     Distributed path: iterative min-label propagation with pointer
@@ -208,8 +203,6 @@ def connected_components(
     bounded by ``max_iterations`` as a safety net and raises rather than
     returning a half-converged clustering.  Each round is two doc_id-keyed
     shuffles (neighbor min + label lookup)."""
-    if local_max_edges is None:
-        local_max_edges = DEFAULT_CC_LOCAL_MAX_EDGES
     edges = (
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -219,25 +212,19 @@ def connected_components(
         # lineage above re-executes O(log diameter) times
         .persist()
     )
-    if local_max_edges:
-        # probe and fetch in ONE bounded job: limit(N+1).collect() never
-        # holds more than N+1 rows no matter how large the edge set is,
-        # and when the graph fits those rows ARE the full edge relation —
-        # no separate count pass
-        probe = edges.limit(local_max_edges + 1).collect()
-        if len(probe) <= local_max_edges:
-            id_type = edges.schema["a"].dataType
-            labels_map = _cc_local_labels([(r.a, r.b) for r in probe])
-            spark = pairs.sparkSession
-            out_schema = StructType([
-                StructField("doc_id", id_type, True),
-                StructField("cluster_id", id_type, True),
-            ])
-            out = spark.createDataFrame(
-                sorted(labels_map.items()), out_schema
-            )
-            edges.unpersist()
-            return out
+    rows = collect_at_most(edges, CC_LOCAL_MAX_EDGES)
+    if rows is not None:
+        id_type = edges.schema["a"].dataType
+        labels_map = _cc_local_labels([(r.a, r.b) for r in rows])
+        out_schema = StructType([
+            StructField("doc_id", id_type, True),
+            StructField("cluster_id", id_type, True),
+        ])
+        out = pairs.sparkSession.createDataFrame(
+            sorted(labels_map.items()), out_schema
+        )
+        edges.unpersist()
+        return out
     labels = (
         edges.select(F.col("a").alias("doc_id"))
         .distinct()
@@ -577,7 +564,6 @@ def contamination_flags(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_hits: int = 1,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Flag training documents that share word ``n``-grams with a benchmark
     corpus (test-set decontamination — the standard pre-training hygiene
@@ -595,24 +581,21 @@ def contamination_flags(
     64-bit collision between a corpus gram and a DIFFERENT benchmark gram
     could over-flag one doc; at benchmark scale (millions of grams, not
     2^32) that is vanishingly unlikely and strictly conservative (flags,
-    never clears).  ``hash_grams=False`` keeps the raw-string join.
+    never clears).
 
     The DuckDB oracle joins on the raw gram; equality of the two paths is
     itself collision-evidence."""
-    gram_key = (
-        (lambda c: F.xxhash64(c)) if hash_grams else (lambda c: c)
-    )
     bench_grams = (
         benchmark.select(
             F.explode(word_shingles(F.col(text_col), n)).alias("gram")
         )
-        .select(gram_key(F.col("gram")).alias("gk"))
+        .select(F.xxhash64("gram").alias("gk"))
         .distinct()
     )
     doc_grams = docs.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(text_col), n)).alias("gram"),
-    ).select("id", gram_key(F.col("gram")).alias("gk"))
+    ).select("id", F.xxhash64("gram").alias("gk"))
     hits = (
         doc_grams.join(bench_grams, "gk")
         .groupBy("id")
@@ -637,7 +620,6 @@ def duplicated_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_docs: int = 2,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Within-corpus duplicated-substring signal (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"; the
@@ -661,11 +643,10 @@ def duplicated_spans(
     collision can only over-count one gram's doc frequency (strictly
     conservative for a removal filter).  The DuckDB oracle joins raw
     strings — equality evidences collision absence."""
-    gram_key = (lambda c: F.xxhash64(c)) if hash_grams else (lambda c: c)
     doc_grams = docs.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(text_col), n)).alias("gram"),
-    ).select("id", gram_key(F.col("gram")).alias("gk"))
+    ).select("id", F.xxhash64("gram").alias("gk"))
     # Only grams that clear min_docs matter to the join: filtering the
     # frequency table BEFORE the join shrinks the build side from every
     # distinct gram in the corpus (~1 row per corpus gram — a multi-hundred-
@@ -714,7 +695,6 @@ def exact_substring_dedup(
     id_col: str = "doc_id",
     min_copies: int = 2,
     keep: str = "first",
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring REMOVAL (the ExactSubstr pass of Lee et
     al. 2022, "Deduplicating Training Data Makes Language Models Better"
@@ -744,10 +724,9 @@ def exact_substring_dedup(
 
     Scale shape: the positioned-gram relation is O(corpus tokens) — the
     same order as the suffix array the reference algorithm builds — keyed
-    by 8-byte ``xxhash64`` gram hashes (``hash_grams=False`` keeps raw
-    strings; a 64-bit collision could merge two gram groups and over-cut
-    one occurrence — the DuckDB oracle joins raw grams, so gate equality
-    evidences collision absence).  Three O(tokens) hash shuffles: gram
+    by 8-byte ``xxhash64`` gram hashes (a 64-bit collision could merge
+    two gram groups and over-cut one occurrence — the DuckDB oracle
+    joins raw grams, so gate equality evidences collision absence).  Three O(tokens) hash shuffles: gram
     stats (count + min-struct keeper, map-side combined), cut-start
     collection per doc, and the starts→docs join.  The per-doc edit is
     pure array algebra: sorted cut starts fold into DISJOINT merged
@@ -777,11 +756,7 @@ def exact_substring_dedup(
                 F.sequence(F.lit(1), F.size("toks") - F.lit(n - 1)), gram_at
             )
         ).alias("pos", "gram"),
-    ).select(
-        "id",
-        "pos",
-        (F.xxhash64("gram") if hash_grams else F.col("gram")).alias("gk"),
-    )
+    ).select("id", "pos", F.xxhash64("gram").alias("gk"))
     gstats = occ.groupBy("gk").agg(
         F.count("*").alias("cnt"),
         F.min(F.struct("id", "pos")).alias("keeper"),

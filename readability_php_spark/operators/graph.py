@@ -28,18 +28,16 @@ across iterations.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Edge-count ceiling for the driver-local PageRank strategy.  Host-level
+from . import collect_at_most
+
+#: Edge-count ceiling for the driver-local PageRank path.  Host-level
 #: graphs are orders of magnitude smaller than their corpora (one node per
 #: HOST), so gate/bench graphs and many production host graphs fit; a real
 #: 10^8-edge web-host graph falls through to the distributed loop.
-DEFAULT_PAGERANK_LOCAL_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_PAGERANK_LOCAL_MAX_EDGES", "500000")
-)
+PAGERANK_LOCAL_MAX_EDGES = 500_000
 
 
 def _round_half_up(x: float, decimals: int) -> float:
@@ -94,7 +92,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     round_decimals: int = 6,
-    local_max_edges: "int | None" = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge list; returns
     ``(node, rank)`` with ranks rounded to ``round_decimals``.
@@ -118,28 +115,25 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    if local_max_edges is None:
-        local_max_edges = DEFAULT_PAGERANK_LOCAL_MAX_EDGES
+    # A host graph under PAGERANK_LOCAL_MAX_EDGES is collected once and
+    # iterated driver-side — ONE bounded job (the limited collect doubles
+    # as the size probe) instead of 2 jobs (dangling scalar + checkpoint)
+    # per iteration.  persist() so an over-ceiling graph doesn't run the
+    # (regex-extraction) edge lineage once per loop round.
     e = edges.select(
         F.col(src_col).cast("string").alias("src"),
         F.col(dst_col).cast("string").alias("dst"),
-    )
-    if local_max_edges:
-        # Strategy dispatch (optimization round; the CC/k-means shape):
-        # a host graph under the ceiling is collected once and iterated
-        # driver-side — ONE bounded job (the limited collect doubles as
-        # the size probe) instead of 2 jobs (dangling scalar + checkpoint)
-        # per iteration.  persist() so an over-ceiling fallthrough doesn't
-        # run the (regex-extraction) edge lineage once per loop round.
-        e = e.persist()
-        probe = e.limit(local_max_edges + 1).collect()
-        if len(probe) <= local_max_edges:
-            rows = [(r.src, r.dst) for r in probe]
-            e.unpersist()
-            return edges.sparkSession.createDataFrame(
-                _pagerank_local(rows, iterations, damping, round_decimals),
-                "node string, rank double",
-            )
+    ).persist()
+    rows = collect_at_most(e, PAGERANK_LOCAL_MAX_EDGES)
+    if rows is not None:
+        e.unpersist()
+        return edges.sparkSession.createDataFrame(
+            _pagerank_local(
+                [(r.src, r.dst) for r in rows],
+                iterations, damping, round_decimals,
+            ),
+            "node string, rank double",
+        )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -185,5 +179,4 @@ def pagerank(
     finally:
         nodes.unpersist()
         out_deg.unpersist()
-        if local_max_edges:  # over-ceiling fallthrough left e persisted
-            e.unpersist()
+        e.unpersist()

@@ -14,11 +14,11 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from . import collect_at_most
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -111,7 +111,7 @@ def nearest_centroids(
 #: of the gates, a wall at the k≈10^4-10^5 cells a 10^9+-vector
 #: SemDeDup/IVF needs.  128 keeps every gate on the (cheapest,
 #: SQL-replayable) literal path while production-scale k flips over.
-DEFAULT_LITERAL_MAX_K = 128
+LITERAL_MAX_K = 128
 
 
 def assign_cells(
@@ -120,13 +120,11 @@ def assign_cells(
     id_col: str,
     vec_col: str,
     probes: int = 1,
-    method: str = "auto",
-    literal_max_k: int = DEFAULT_LITERAL_MAX_K,
     with_cosine: bool = False,
 ) -> DataFrame:
     """Coarse-quantizer cell assignment — every consumer (k-means
     assignment, IVF corpus/query probing, SemDeDup) goes through here so
-    the literal-vs-join strategy decision lives in ONE place.
+    the literal-vs-join decision lives in ONE place.
 
     Returns ``df`` plus ``cid`` (``probes == 1``) or ``cids``
     (``probes > 1``, the probe cells by ascending (d2, cid)), and
@@ -134,15 +132,15 @@ def assign_cells(
     centroid, ``probes == 1`` only).  ``id_col`` must be unique per row
     (every consumer keys on a unique vector id).
 
-    Strategies (``method="auto"`` picks by ``literal_max_k``; both
-    produce BIT-IDENTICAL results — same zip_with fold arithmetic, same
-    (d2, cid) tie-break — differentially tested and gate-verified):
+    Paths (``k <= LITERAL_MAX_K`` takes the literal one; both produce
+    BIT-IDENTICAL results — same zip_with fold arithmetic, same (d2, cid)
+    tie-break — differentially tested and gate-verified):
 
-    - ``"literal"``: the k centroids ride into one column expression
+    - literal: the k centroids ride into one column expression
       (:func:`nearest_centroids`) — zero shuffle, zero join, replayable
       in the DuckDB oracles; per-row cost AND expression size are O(k·d),
       so it is the cheapest path exactly while k is small.
-    - ``"join"``: the centroids become a broadcast DataFrame;
+    - join: the centroids become a broadcast DataFrame;
       assignment is a BroadcastNestedLoopJoin fan-out (k rows per
       vector, map-side) reduced by ``min(struct(d2, cid[, cos]))`` —
       a map-side-combined aggregate whose shuffle carries ONE struct
@@ -159,16 +157,14 @@ def assign_cells(
         raise ValueError("with_cosine requires probes=1")
     cids = [int(c) for c, _ in centroids]
     if len(set(cids)) != k or cids != sorted(cids):
-        # both strategies tie-break equal-d2 to the EARLIER centroid; that
+        # both paths tie-break equal-d2 to the EARLIER centroid; that
         # only means "lower cid" (the documented law) when the list order
         # is the cid order
         raise ValueError("centroids must be ordered by distinct ascending cid")
-    if method == "auto":
-        method = "literal" if k <= literal_max_k else "join"
-    if method == "literal":
+    if k <= LITERAL_MAX_K:
         # nearest_centroids ranks by LIST INDEX; when the cids aren't the
         # 0-based indices, remap through a literal lookup so both
-        # strategies emit the caller's actual cid values (contiguous
+        # paths emit the caller's actual cid values (contiguous
         # 0..k-1 callers — every gate — keep the identity plan)
         contiguous = cids == list(range(k))
         cid_lit = F.array(*[F.lit(c) for c in cids])
@@ -200,10 +196,6 @@ def assign_cells(
                 else F.transform(idxs, lambda i: F.element_at(cid_lit, i + 1)),
             )
         return out
-    if method != "join":
-        raise ValueError(
-            f"method must be 'auto', 'literal' or 'join', got {method!r}"
-        )
     cents = df.sparkSession.createDataFrame(
         [(int(c), [float(x) for x in v]) for c, v in centroids],
         "cid int, cvec array<double>",
@@ -245,16 +237,14 @@ def assign_cells(
     return df.join(topp, id_col)
 
 
-#: Row ceiling for the driver-local Lloyd strategy of
+#: Row ceiling for the driver-local Lloyd path of
 #: :func:`kmeans_centroids`: train locally when the corpus fits in one
 #: bounded collect (rows ≤ ceiling).  Quantizer TRAINING corpora are small
 #: by design even at 10^12-vector scale (you train the coarse quantizer on
 #: a sample, not the corpus — the FAISS/ScaNN shape), so the local path is
 #: also the production path; past the ceiling the distributed loop runs
-#: unchanged.  Env-overridable for cluster deployments.
-DEFAULT_KMEANS_LOCAL_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_LOCAL_MAX_ROWS", "200000")
-)
+#: unchanged.
+KMEANS_LOCAL_MAX_ROWS = 200_000
 
 
 def _round6_half_up(x: float) -> float:
@@ -316,9 +306,6 @@ def kmeans_centroids(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantizer_method: str = "auto",
-    strategy: str = "auto",
-    local_max_rows: "int | None" = None,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means (IVF coarse quantizer).
 
@@ -329,14 +316,14 @@ def kmeans_centroids(
     tiny (broadcast), assignment is a map-side pass, the only shuffle is the
     k-way average.
 
-    Strategy dispatch (optimization round; the BPE ``local``-merge shape):
-    ``auto`` counts the corpus and, when it fits under ``local_max_rows``
-    (default :data:`DEFAULT_KMEANS_LOCAL_MAX_ROWS`), collects the vectors
-    ONCE and runs the whole Lloyd loop driver-side (``_lloyd_local``) —
-    2 bounded jobs total instead of 2 Spark jobs per iteration.  This is
-    also the industrial shape: coarse quantizers train on a bounded sample
-    even when the corpus is 10^12 vectors.  ``strategy="distributed"``
-    forces the per-iteration Spark loop (differential-tested identical).
+    Input size picks the path: a corpus of at most
+    :data:`KMEANS_LOCAL_MAX_ROWS` vectors comes back in ONE limited
+    collect (:func:`collect_at_most`) and the whole Lloyd loop runs
+    driver-side (``_lloyd_local``), in place of 2 Spark jobs per
+    iteration.  This is also the industrial shape: coarse quantizers
+    train on a bounded sample even when the corpus is 10^12 vectors.  A
+    larger corpus runs the per-iteration Spark loop (differential-tested
+    identical).
 
     Means are rounded to 6 decimals per iteration: float64 sums over an
     unordered partition set are only reproducible to ~1e-13, and the coarse
@@ -344,35 +331,14 @@ def kmeans_centroids(
     trained centroids (and hence every downstream cell assignment)
     cross-engine and cross-run deterministic, which is what lets the DuckDB
     oracle replay the exact same Lloyd trajectory."""
-    if local_max_rows is None:
-        local_max_rows = DEFAULT_KMEANS_LOCAL_MAX_ROWS
-    if strategy == "auto" and local_max_rows:
-        # probe and fetch in ONE bounded job: the limited collect never
-        # holds more than local_max_rows+1 rows, and when the corpus fits
-        # those rows ARE the training set — no separate count pass
-        probe = (
-            embeddings.select(id_col, vec_col)
-            .limit(local_max_rows + 1)
-            .collect()
-        )
-        if len(probe) <= local_max_rows:
-            rows = [(r[0], list(r[1])) for r in probe]
-            return embeddings.sparkSession.createDataFrame(
-                _lloyd_local(rows, k, iters), "cid int, cvec array<double>"
-            )
-        strategy = "distributed"
-    elif strategy == "auto":
-        strategy = "distributed"
-    if strategy == "local":
-        rows = [
-            (r[0], list(r[1]))
-            for r in embeddings.select(id_col, vec_col).collect()
-        ]
+    rows = collect_at_most(
+        embeddings.select(id_col, vec_col), KMEANS_LOCAL_MAX_ROWS
+    )
+    if rows is not None:
         return embeddings.sparkSession.createDataFrame(
-            _lloyd_local(rows, k, iters), "cid int, cvec array<double>"
+            _lloyd_local([(r[0], list(r[1])) for r in rows], k, iters),
+            "cid int, cvec array<double>",
         )
-    if strategy != "distributed":
-        raise ValueError(f"unknown kmeans strategy: {strategy!r}")
     # Lloyd re-reads the corpus once per iteration (assign + mean) plus the
     # init scan — persist for the loop's lifetime (standard k-means-training
     # shape; at 10^12 rows you'd train on a persisted sample instead).
@@ -401,7 +367,6 @@ def kmeans_centroids(
             id_col,
             vec_col,
             probes=1,
-            method=quantizer_method,
         ).select(id_col, vec_col, "cid")
         means = (
             assigned.select("cid", F.posexplode(vec_col).alias("pos", "x"))
@@ -429,7 +394,6 @@ def ivf_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantizer_method: str = "auto",
 ) -> DataFrame:
     """IVF approximate top-k: assign corpus vectors to their nearest
     centroid; queries probe the ``n_probe`` nearest cells only.
@@ -440,14 +404,13 @@ def ivf_topk(
     cid-keyed corpus×queries join, which is the IVF probe itself.  The
     probes>1 assignment only ever runs on the QUERY side (bounded)."""
     cent = kmeans_centroids(
-        embeddings, n_centroids, id_col=id_col, vec_col=vec_col,
-        quantizer_method=quantizer_method,
+        embeddings, n_centroids, id_col=id_col, vec_col=vec_col
     )
     centroids = [(r.cid, list(r.cvec)) for r in cent.orderBy("cid").collect()]
 
     corpus = assign_cells(
         embeddings.select(F.col(id_col), F.col(vec_col)),
-        centroids, id_col, vec_col, probes=1, method=quantizer_method,
+        centroids, id_col, vec_col, probes=1,
     ).select(
         F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec_corp"), "cid"
     )
@@ -455,7 +418,7 @@ def ivf_topk(
         embeddings.filter(F.col(id_col).isin(query_ids)).select(
             F.col(id_col), F.col(vec_col)
         ),
-        centroids, id_col, vec_col, probes=n_probe, method=quantizer_method,
+        centroids, id_col, vec_col, probes=n_probe,
     ).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
@@ -614,7 +577,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_rows: int = 100_000,
-    quantizer_method: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by embedding
     clustering — k-means the corpus into cells, compare pairs only WITHIN
@@ -638,16 +600,14 @@ def semdedup(
     from .dedup import connected_components
 
     cent = kmeans_centroids(
-        embeddings, n_centroids, id_col=id_col, vec_col=vec_col,
-        quantizer_method=quantizer_method,
+        embeddings, n_centroids, id_col=id_col, vec_col=vec_col
     )
     centroids = [(r.cid, list(r.cvec)) for r in cent.orderBy("cid").collect()]
     asn = assign_cells(
         embeddings.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
         ),
-        centroids, "id", "vec", probes=1, method=quantizer_method,
-        with_cosine=True,
+        centroids, "id", "vec", probes=1, with_cosine=True,
     ).select(
         "id", "vec", F.col("cid").alias("bucket"), "centroid_sim"
     # the argmin+cosine map is the operator's most expensive stage and

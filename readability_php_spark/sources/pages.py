@@ -180,14 +180,9 @@ def documents_corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: below the floor are too small for the extra exchange to buy anything;
 #: tables above the ceiling are cheap to scan per byte (wide relational
 #: rows) and expensive to move, so the shuffle would cost more than the
-#: idle cores.  Both env-overridable so a cluster deployment can retune
-#: without code changes.
-_SCAN_REPAIR_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCAN_REPAIR_MIN_BYTES", str(128 * 1024))
-)
-_SCAN_REPAIR_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCAN_REPAIR_MAX_BYTES", str(64 * 1024 * 1024))
-)
+#: idle cores.
+_SCAN_REPAIR_MIN_BYTES = 128 * 1024
+_SCAN_REPAIR_MAX_BYTES = 64 * 1024 * 1024
 
 _scan_units_cache: dict[str, tuple[int, int]] = {}
 

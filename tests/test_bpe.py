@@ -7,6 +7,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from readability_php_spark.operators import bpe
 from readability_php_spark.operators.bpe import (
     END_OF_WORD,
     bpe_token_counts,
@@ -56,13 +57,12 @@ def _ref_word_counts(texts):
     return wc
 
 
-def _check(spark, texts, merges, min_pair_count=2, strategy="auto"):
+def _check(spark, texts, merges, min_pair_count=2):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
     )
     table, enc = bpe_train(
-        docs, merges=merges, min_pair_count=min_pair_count,
-        strategy=strategy,
+        docs, merges=merges, min_pair_count=min_pair_count
     )
     got_table = [
         (r.rank, r.left, r.right, r.pair_count) for r in table.collect()
@@ -252,15 +252,16 @@ def test_bpe_argmax_tiebreak_is_byte_order(spark):
     assert [(l, r) for _, l, r, _ in ref_table] == [rows[0], rows[1]]
 
 
-def test_bpe_strategies_identical_trajectory(spark):
-    """The driver-local incremental-update trainer (the default — one
-    Spark job, constant driver round-trips) and the fully-distributed
-    per-merge loop produce the IDENTICAL merge table and encoded vocab —
-    on a crafted corpus covering runs/overlaps/ties and on random text.
-    Both are also checked against the flat pure-Python reference via
-    _check below (which recomputes pair counts from scratch each
-    iteration, so agreement also validates the local trainer's
-    incremental pair-count delta updates)."""
+def test_bpe_strategies_identical_trajectory(spark, monkeypatch):
+    """The driver-local incremental-update trainer (the path under
+    BPE_LOCAL_MAX_WORDS — one Spark job, constant driver round-trips)
+    and the fully-distributed per-merge loop (a zero ceiling forces it)
+    produce the IDENTICAL merge table and encoded vocab — on a crafted
+    corpus covering runs/overlaps/ties and on random text.  Both are
+    also checked against the flat pure-Python reference via _check below
+    (which recomputes pair counts from scratch each iteration, so
+    agreement also validates the local trainer's incremental pair-count
+    delta updates)."""
     rng = random.Random(7)
     rand_texts = [
         " ".join(
@@ -275,24 +276,50 @@ def test_bpe_strategies_identical_trajectory(spark):
         (["a b", "", "  "], 5, 2),  # early stop / degenerate docs
     ]:
         got = {}
-        for strat in ("local", "perjob"):
-            _check(spark, texts, merges, min_pair_count=mpc, strategy=strat)
-            docs = spark.createDataFrame(
-                [(i, t) for i, t in enumerate(texts)],
-                "doc_id int, text string",
-            )
-            table, enc = bpe_train(
-                docs, merges=merges, min_pair_count=mpc, strategy=strat
-            )
-            got[strat] = (
-                [(r.rank, r.left, r.right, r.pair_count)
-                 for r in table.collect()],
-                {r.word: (r.cnt, list(r.syms)) for r in enc.collect()},
-            )
-        assert got["local"] == got["perjob"]
+        for path in ("local", "distributed"):
+            with monkeypatch.context() as m:
+                if path == "distributed":
+                    m.setattr(bpe, "BPE_LOCAL_MAX_WORDS", 0)
+                _check(spark, texts, merges, min_pair_count=mpc)
+                docs = spark.createDataFrame(
+                    [(i, t) for i, t in enumerate(texts)],
+                    "doc_id int, text string",
+                )
+                table, enc = bpe_train(
+                    docs, merges=merges, min_pair_count=mpc
+                )
+                got[path] = (
+                    [(r.rank, r.left, r.right, r.pair_count)
+                     for r in table.collect()],
+                    {r.word: (r.cnt, list(r.syms)) for r in enc.collect()},
+                )
+        assert got["local"] == got["distributed"]
 
 
-def test_bpe_rejects_bad_strategy(spark):
-    docs = spark.createDataFrame([(0, "x y")], "doc_id int, text string")
-    with pytest.raises(ValueError):
-        bpe_train(docs, merges=1, strategy="turbo")
+def test_bpe_auto_goes_distributed_over_bound(spark, monkeypatch):
+    """A corpus with more distinct words than BPE_LOCAL_MAX_WORDS never
+    reaches the driver-local trainer: the per-merge Spark loop learns
+    the same merges and the same segmentation."""
+    texts = ["lower lowest low low lower", "newer newest new wider"]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
+    )
+
+    def train():
+        table, enc = bpe_train(docs, merges=8)
+        return (
+            [tuple(r) for r in table.orderBy("rank").collect()],
+            sorted((r.word, r.cnt, list(r.syms)) for r in enc.collect()),
+        )
+
+    calls = []
+    real = bpe._bpe_train_local
+    monkeypatch.setattr(
+        bpe, "_bpe_train_local", lambda *a: calls.append(1) or real(*a)
+    )
+    local = train()
+    assert len(calls) == 1  # under the ceiling: the local trainer ran
+    n_words = len({w for t in texts for w in t.split()})
+    monkeypatch.setattr(bpe, "BPE_LOCAL_MAX_WORDS", n_words - 1)
+    assert train() == local
+    assert len(calls) == 1

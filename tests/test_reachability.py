@@ -1,5 +1,7 @@
 """Every top-level definition in the package is reached from a program
-entry point, or is listed in ``KEEP`` with a reason.
+entry point, or is listed in ``KEEP`` with a reason.  Two source guards
+ride along: the package reads no environment variable, and every ``.py``
+in the repository compiles without an invalid-escape warning.
 
 Roots are all non-test ``.py`` files outside the package (``jobs/``,
 ``tools/``, ``extractbench/``, ``bench*.py``, ``__spark_entry__.py``) and
@@ -18,6 +20,7 @@ from __future__ import annotations
 
 import ast
 import os
+import warnings
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "readability_php_spark"
@@ -133,3 +136,51 @@ def test_keep_entries_are_defined_and_needed():
     assert not set(KEEP) - defined, f"KEEP names no definition: {sorted(set(KEEP) - defined)}"
     reached_anyway = sorted(set(KEEP) & _reached(roots, defs))
     assert not reached_anyway, f"KEEP entries reached without KEEP: {reached_anyway}"
+
+
+def test_package_reads_no_environment():
+    """Operators pick their path by input size against module constants;
+    no environment variable can change what the package computes."""
+    hits = []
+    for path, in_package in _source_files():
+        if not in_package:
+            continue
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and n.value.id == "os"
+                and n.attr in ("environ", "getenv")
+            ) or (
+                isinstance(n, ast.ImportFrom)
+                and n.module == "os"
+                and {a.name for a in n.names} & {"environ", "getenv"}
+            ):
+                hits.append(f"{os.path.relpath(path, REPO)}:{n.lineno}")
+    assert not hits, f"environment reads in the package: {hits}"
+
+
+def test_sources_compile_without_escape_warnings():
+    """An invalid escape such as ``'\\s'`` in a non-raw literal warns today
+    and is slated to become an error; every ``.py`` must compile clean."""
+    bad = []
+    for dirpath, dirnames, filenames in os.walk(REPO):
+        dirnames[:] = sorted(
+            d for d in dirnames if not d.startswith(".") and d != "__pycache__"
+        )
+        for fn in sorted(filenames):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", DeprecationWarning)
+                warnings.simplefilter("error", SyntaxWarning)
+                try:
+                    compile(src, path, "exec")
+                except SyntaxError as ex:
+                    bad.append(f"{os.path.relpath(path, REPO)}:{ex.lineno} {ex.msg}")
+    assert not bad, "sources that warn on compile:\n  " + "\n  ".join(bad)

@@ -2,6 +2,10 @@
 on Spark and its oracle_sql() twin on DuckDB over the same parquet tables;
 compare row count, column names, and order-insensitive value hash.
 
+Each gate runs under its own Spark job group; its line ends with the
+gate's Spark seconds and the jobs, stages and tasks it ran, read from
+the status tracker.
+
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
 
@@ -45,6 +49,25 @@ def value_hash(pdf) -> str:
         h.update("\x1f".join(r).encode())
         h.update(b"\x1e")
     return h.hexdigest()[:16]
+
+
+def job_profile(sc, group: str) -> str:
+    """Jobs, stages and tasks of the job group ``group``.  A stage whose
+    shuffle output an earlier job already wrote is skipped: it counts as
+    a stage but runs no task."""
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stage_ids = {s for j in jobs if j is not None for s in j.stageIds}
+    done = [
+        info.numCompletedTasks
+        for info in map(tracker.getStageInfo, stage_ids)
+        if info is not None
+    ]
+    skipped = len(stage_ids) - sum(1 for n in done if n)
+    return (
+        f"{len(jobs)} jobs, {len(stage_ids)} stages ({skipped} skipped), "
+        f"{sum(done)} tasks"
+    )
 
 
 def main() -> int:
@@ -94,6 +117,7 @@ def _run(spark, con, entrymod, sf_dir, only) -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        spark.sparkContext.setJobGroup(name, name)
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -102,8 +126,9 @@ def _run(spark, con, entrymod, sf_dir, only) -> int:
             failures += 1
             continue
         spark_t = time.time() - t0
+        cost = f"{spark_t:.1f}s, {job_profile(spark.sparkContext, name)}"
         if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows (no oracle) [{spark_t:.1f}s]")
+            print(f"rows  {name}: {len(sdf)} rows (no oracle) [{cost}]")
             continue
         try:
             odf = con.execute(oracles[name]).df()
@@ -135,7 +160,7 @@ def _run(spark, con, entrymod, sf_dir, only) -> int:
                 print("   oracle:", b.iloc[i].to_dict())
             failures += 1
             continue
-        print(f"OK    {name}: {len(sdf)} rows, hash {hs} [{spark_t:.1f}s]")
+        print(f"OK    {name}: {len(sdf)} rows, hash {hs} [{cost}]")
     return failures
 
 
